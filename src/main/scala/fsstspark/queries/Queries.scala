@@ -307,208 +307,6 @@ object Queries {
       .orderBy("chunk_id")
   }
 
-  // ------------------------------------------ training-data ops (dedup/text)
-
-  def dedupExact(s: SparkSession, dir: String): DataFrame =
-    documents(s, dir).groupBy("lang")
-      .agg(count(lit(1)).as("n_docs"), countDistinct(md5(col("text"))).as("n_unique"))
-      .orderBy("lang")
-
-  def textTokens(s: SparkSession, dir: String): DataFrame =
-    documents(s, dir).groupBy("lang")
-      .agg(count(lit(1)).as("n_docs"),
-        sum(size(split(col("text"), "\\s+"))).as("n_tokens"),
-        sum(length(col("text"))).as("total_chars"))
-      .orderBy("lang")
-
-  /** documents plus deterministic planted near-duplicates (1-in-10 docs
-    * copied with a short appended tail) — the fixture both dedup queries
-    * run on, so near-dup counts are non-trivial and reproducible.
-    */
-  def docsWithNearDups(s: SparkSession, dir: String): DataFrame = {
-    val docs = documents(s, dir)
-    val dups = docs.filter(col("doc_id") % 10 === 0)
-      .withColumn("doc_id", col("doc_id") + 1000000)
-      .withColumn("text", concat(col("text"), lit(" trailing marker words")))
-    docs.unionByName(dups)
-  }
-
-  def dedupMinhash(s: SparkSession, dir: String): DataFrame =
-    fsstspark.textops.Dedup.minhashPairs(
-      docsWithNearDups(s, dir), "doc_id", "text", threshold = 0.7)
-      .select(col("id_a"), col("id_b"), round(col("jaccard"), 3).as("jaccard"))
-      .orderBy("id_a", "id_b") // compare-order only; the library emits unsorted pairs
-
-  def dedupSimhash(s: SparkSession, dir: String): DataFrame =
-    fsstspark.textops.Dedup.simhashPairs(
-      docsWithNearDups(s, dir), "doc_id", "text", maxHamming = 3)
-      .orderBy("id_a", "id_b") // compare-order only
-
-  /** The planted near-duplicates restricted to their known ids — an exact
-    * DuckDB oracle for near-dup RECALL: the pipeline must recover every
-    * (doc_id, doc_id+1000000) pair it planted. Natural (unplanned) near-dup
-    * pairs stay in the un-oracled [[dedupMinhash]]/[[dedupSimhash]] output.
-    */
-  // Dedup emits ids in lexicographic order (ids are opaque strings —
-  // urls in production); normalize to numeric (lo, hi) before matching
-  // the planted offset.
-  private def plantedPairs(pairs: DataFrame, offset: Long): DataFrame =
-    pairs
-      .select(least(col("id_a").cast("long"), col("id_b").cast("long")).as("id_a"),
-        greatest(col("id_a").cast("long"), col("id_b").cast("long")).as("id_b"))
-      .filter(col("id_b") === col("id_a") + offset)
-      .orderBy("id_a")
-
-  def dedupMinhashPlanted(s: SparkSession, dir: String): DataFrame =
-    plantedPairs(fsstspark.textops.Dedup.minhashPairs(
-      docsWithNearDups(s, dir), "doc_id", "text", threshold = 0.7), 1000000L)
-
-  /** SimHash's planted fixture perturbs formatting only (trailing
-    * whitespace): the token stream — and therefore the fingerprint — is
-    * unchanged while the raw bytes differ, so every planted pair sits at
-    * hamming 0 and total recall is a hard guarantee the oracle can pin.
-    * (An appended-words perturbation is NOT simhash-recoverable in
-    * general: adding t tokens shifts each bit-sum by ≤t, and for a
-    * T-token doc the expected |bit-sum| is ~√T, so flipped bits scale far
-    * past any fixed hamming cutoff — that tolerance envelope is
-    * characterized in TextOpsSpec instead.)
-    */
-  def dedupSimhashPlanted(s: SparkSession, dir: String): DataFrame = {
-    val docs = documents(s, dir)
-    val dups = docs.filter(col("doc_id") % 10 === 0)
-      .withColumn("doc_id", col("doc_id") + 2000000)
-      .withColumn("text", concat(col("text"), lit("  ")))
-    plantedPairs(fsstspark.textops.Dedup.simhashPairs(
-      docs.unionByName(dups), "doc_id", "text", maxHamming = 3), 2000000L)
-  }
-
-  /** Embedding-cosine near-dup over the embeddings table with planted
-    * exact-copy vectors (vec_id+1000000): only the planted pairs can
-    * reach cosine ≥ 0.95 (the synthetic embeddings are near-uniform, top
-    * natural cosine ≈ 0.3), so the FULL output is oracle-exact — recall
-    * (every planted pair found through the SRP buckets) and precision
-    * (no natural pair passes) in one check.
-    */
-  def dedupEmbedding(s: SparkSession, dir: String): DataFrame = {
-    val emb = s.read.parquet(s"$dir/embeddings.parquet")
-    val withDups = emb.unionByName(
-      emb.filter(col("vec_id") % 10 === 0)
-        .withColumn("vec_id", col("vec_id") + 1000000))
-    fsstspark.textops.Dedup.embeddingPairs(withDups, "vec_id", "embedding",
-        threshold = 0.95)
-      .select(col("id_a"), col("id_b"))
-      .orderBy("id_a", "id_b") // compare-order only
-  }
-
-  /** The dropped-bucket accounting surfaced as an oracle-checkable query:
-    * every doc_id % 5 == 0 document is rewritten to identical boilerplate,
-    * so each of the 16 minhash bands has EXACTLY one bucket over the
-    * 50-member cap holding those n/5 docs. Minhash band buckets hash four
-    * 64-bit minhashes, so a benign bucket over the cap would require a
-    * 50-doc clique of near-identical natural texts (none exists in word
-    * soup at any sf), and unrelated collisions can only GROW a hot
-    * bucket — count 16 and the ≥n/5 member floor are scale-stable.
-    * (SimHash drop accounting is NOT oracled here: its 16-bit blocks over
-    * Zipf-correlated bits legitimately form natural hot buckets whose
-    * count grows with corpus size; TextOpsSpec covers it.)
-    */
-  def dedupDroppedBuckets(s: SparkSession, dir: String): DataFrame = {
-    val docs = documents(s, dir)
-      .withColumn("text", when(col("doc_id") % 5 === 0,
-        lit("identical boilerplate page body repeated across the crawl"))
-        .otherwise(col("text")))
-    val floor = docs.filter(col("doc_id") % 5 === 0).count()
-    fsstspark.textops.Dedup.minhashDedup(
-        docs, "doc_id", "text", maxBucketSize = 50).droppedBuckets
-      .groupBy("method")
-      .agg(count(lit(1)).as("n_dropped_buckets"),
-        (min(col("n_members")) >= floor).as("members_floor_ok"))
-      .orderBy("method")
-  }
-
-  /** The n-gram Jaccard metric end-to-end on the planted near-dup pairs:
-    * candidate GENERATION at scale belongs to minhash/simhash/embedding
-    * LSH; this query verifies the exact word-shingle Jaccard computation
-    * itself — every planted pair must clear the similarity floor
-    * ((T-2)/(T+1) ≥ 0.75 at the corpus' shortest planted doc).
-    */
-  def dedupNgram(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val docs = docsWithNearDups(s, dir)
-    val a = docs.select(col("doc_id").as("id_a"), col("text").as("text_a"))
-    val b = docs.select((col("doc_id") - 1000000).as("join_id"),
-      col("doc_id").as("id_b"), col("text").as("text_b"))
-    a.join(b, col("id_a") === col("join_id"))
-      .select(col("id_a"), col("id_b"), col("text_a"), col("text_b"))
-      .as[(Long, Long, String, String)]
-      .map { case (ia, ib, ta, tb) =>
-        (ia, ib, fsstspark.textops.Dedup.exactJaccard(
-          fsstspark.textops.Dedup.shingles(ta), fsstspark.textops.Dedup.shingles(tb)))
-      }
-      .toDF("id_a", "id_b", "jaccard")
-      .filter(col("jaccard") >= 0.3)
-      .select("id_a", "id_b").orderBy("id_a")
-  }
-
-  /** Rows-only by necessity: the testdata `lang` column is random
-    * metadata over language-free synthetic word soup (verified: the same
-    * English-ish token stream under every label), so there is no ground
-    * truth to oracle the heuristic against here; accuracy on genuine
-    * stopword-bearing sentences is asserted in TextOpsSpec.
-    */
-  def textAnalysis(s: SparkSession, dir: String): DataFrame =
-    fsstspark.textops.TextAnalysis.analyze(documents(s, dir), "doc_id", "text")
-      .groupBy("predicted_lang")
-      .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("n_tokens"),
-        sum("n_fingerprints").as("n_fingerprints"))
-      .orderBy("predicted_lang")
-
-  def annBruteforce(s: SparkSession, dir: String): DataFrame = {
-    val emb = s.read.parquet(s"$dir/embeddings.parquet")
-    fsstspark.textops.AnnSearch.bruteForceTopK(
-        emb, emb.filter(col("vec_id") < 5), "vec_id", "embedding", k = 10)
-      .select(col("query_id").cast("long").as("query_id"),
-        col("id").cast("long").as("id"), col("rank").cast("long").as("rank"))
-      .orderBy("query_id", "rank") // compare-order only
-  }
-
-  /** Approximate-ANN correctness surfaced as an oracle-checkable number:
-    * recall@10 of the approximate method against the (independently
-    * DuckDB-oracled) brute-force top-10, thresholded per query. The
-    * threshold carries a wide margin below locally measured recall so the
-    * check is stable across scale factors while still failing hard if the
-    * bucketing/probing logic regresses.
-    */
-  private def annRecall(s: SparkSession, dir: String,
-      approx: (DataFrame, DataFrame) => DataFrame, minHits: Int): DataFrame = {
-    val emb = s.read.parquet(s"$dir/embeddings.parquet")
-    val q = emb.filter(col("vec_id") < 5)
-    val res = approx(emb, q)
-      .select(col("query_id").cast("long").as("query_id"), col("id").cast("long").as("id"))
-    val bf = fsstspark.textops.AnnSearch.bruteForceTopK(emb, q, "vec_id", "embedding", k = 10)
-      .select(col("query_id").cast("long").as("query_id"), col("id").cast("long").as("id"))
-    val hits = res.join(bf, Seq("query_id", "id"))
-      .groupBy("query_id").agg(count(lit(1)).as("n_hits"))
-    q.select(col("vec_id").cast("long").as("query_id"))
-      .join(hits, Seq("query_id"), "left")
-      .select(col("query_id"),
-        (coalesce(col("n_hits"), lit(0L)) >= minHits).as("recall_ok"))
-      .orderBy("query_id")
-  }
-
-  // Thresholds from tools/AnnProbe across sf0.001/0.01/0.1: worst-case
-  // hits@10 are 6 (LSH, 32 tables) and 8 (IVF, 24/32 probes) — the
-  // asserted minima keep a ≥2-hit margin while still failing hard on any
-  // bucketing/probing regression. (The sf embeddings are near-uniform —
-  // hard mode for ANN; planted-cluster recall ≥0.9 is in TextOpsSpec.)
-  def annLsh(s: SparkSession, dir: String): DataFrame =
-    annRecall(s, dir, (emb, q) => fsstspark.textops.AnnSearch.lshTopK(
-      emb, q, "vec_id", "embedding", k = 10, nBits = 6, nTables = 32), minHits = 4)
-
-  def annIvf(s: SparkSession, dir: String): DataFrame =
-    annRecall(s, dir, (emb, q) => fsstspark.textops.AnnSearch.ivfTopK(
-      emb, q, "vec_id", "embedding", k = 10, nCentroids = 32, nProbe = 24), minHits = 6)
-
   /** The north-rule input shape (url, warc_ts, html, text, lang —
     * BASELINE.json input_hint) synthesized deterministically from the
     * driver's `documents` table with pure SQL-expressible expressions, so
@@ -985,22 +783,6 @@ object Queries {
       sum(octet_length(encode(col("text"), "UTF-8"))).as("text_bytes"))
   }
 
-  /** Multimodal plumbing over the pages' binary html column: batched
-    * feature extraction (deterministic fake decoder — see
-    * [[fsstspark.textops.Multimodal]]) summarized per media type.
-    */
-  def multimodalFeatures(s: SparkSession, dir: String): DataFrame = {
-    val pages = pagesFromDocs(s, dir)
-    // media_type/n_items/total_bytes are DuckDB-oracled (the batched
-    // per-partition plumbing must deliver every payload byte); the decode
-    // seam itself (widths, features) is covered by ScalaTest — the real
-    // decoder is an honest stub, no media libs ship in this container.
-    fsstspark.textops.Multimodal.extractFeatures(pages, "url", "html", "image")
-      .groupBy("media_type")
-      .agg(count(lit(1)).as("n_items"), sum("n_bytes").as("total_bytes"))
-      .orderBy("media_type")
-  }
-
   /** Streaming ingest front end: pages land as files, each micro-batch is
     * encoded via the local pipeline into the checkpoint table
     * (exactly-once at chunk granularity). Summarized per (column, codec).
@@ -1176,14 +958,6 @@ object Queries {
       .unionByName(stateOf(io.readChunks(s, "docs"), 3L))
       .orderBy("snap")
   }
-
-  def textQuality(s: SparkSession, dir: String): DataFrame =
-    documents(s, dir).groupBy("lang")
-      .agg(count(lit(1)).as("n_docs"),
-        sum(length(col("text"))).as("total_chars"),
-        sum(length(col("text")) - length(regexp_replace(col("text"), "[.!?]", ""))).as("n_sentence_punct"),
-        sum(length(col("text")) - length(regexp_replace(col("text"), "\\s", ""))).as("n_whitespace"))
-      .orderBy("lang")
 
   /** Row-level `DELETE FROM` through SQL — the COPY-ON-WRITE tier
     * ([[fsstspark.sources.FsstRowDelete]]): a VALUE predicate can never

@@ -14,7 +14,7 @@ import java.nio.charset.StandardCharsets.UTF_8
   */
 object FsstCli {
   def main(args: Array[String]): Unit = {
-    if (args.isEmpty) { System.err.println("usage: FsstCli <file> [--whole] [--auto]"); sys.exit(2) }
+    if (args.isEmpty) { System.err.println("usage: FsstCli <file> [--whole] [--auto] [--repeat N]"); sys.exit(2) }
     if (args.contains("--auto")) { runAuto(args); return }
     val path = Paths.get(args(0))
     if (!Files.exists(path)) { System.err.println(s"error: no such file: ${args(0)}"); sys.exit(2) }

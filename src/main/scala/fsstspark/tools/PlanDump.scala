@@ -29,10 +29,6 @@ object PlanDump {
     "pipe_resume_pending" -> """Resume semantics: the pending set is a
       |BroadcastHashJoin LeftAnti against the (tiny) completed-chunk-id set —
       |the full data is never shuffled to discover what is left to do.""".stripMargin,
-    "ann_bruteforce" -> """BroadcastNestedLoopJoin against the (tiny) query-vector set;
-      |cosine_sim is a custom codegen expression inside the project (inside
-      |the WholeStageCodegen span, no interpreted lambda); top-k is a
-      |window over query_id partitions.""".stripMargin,
     "lineitem_codec_selection" -> """Single-pass multi-column encode (encodeColumns):
       |ONE parquet scan of lineitem (ReadSchema lists exactly the seven
       |encoded columns + the key parts) and ONE Exchange on chunk_id feed
@@ -53,16 +49,6 @@ object PlanDump {
       |chunking; input layout is the lineage). The verification joins are
       |the only shuffles in the job, exactly as at cluster scale where the
       |rewrite itself must not move data.""".stripMargin,
-    "dedup_minhash" -> """Bucketed LSH candidate generation: narrow map for
-      |signatures, equi-join on (band, bhash) — never a cross join — with
-      |the hot-bucket guard as a broadcast left-anti against the (tiny)
-      |over-cap bucket list; exact-Jaccard verification joins text back for
-      |candidate pairs only.""".stripMargin,
-    "dedup_embedding" -> """Embedding-cosine near-dup, same scale template: SRP
-      |bucket equi-join on (table, bucket) generates candidates (no cross
-      |join anywhere in the plan), ids-only pairs dedup before the vectors
-      |join back, exact cosine is the codegen expression evaluated on
-      |candidates only.""".stripMargin,
     "q_point_lookup" -> """The 100 TB point-read path: the manifest (tiny)
       |selects both the hit FILES and the hit chunk ids on the driver; the
       |data scan opens ONLY those files, with a pushable chunk_id IN filter

@@ -10,6 +10,12 @@ import org.apache.spark.sql.functions._
   * GB/s over Common-Crawl-style pages).
   */
 object Bench {
+  /** `v` with `digits` decimals in JSON number form, whatever the JVM's
+    * default locale (a comma-decimal locale would print `1,231`).
+    */
+  private[graft] def num(v: Double, digits: Int = 3): String =
+    String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(v))
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -168,8 +174,8 @@ object Bench {
     val decGbps = bytesIn / 1e9 / results("pages_decode")
     val ratio = bytesOut.toDouble / bytesIn
 
-    def repArr(ts: Seq[Double]): String = ts.map(t => f"$t%.3f").mkString("[", ",", "]")
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
+    def repArr(ts: Seq[Double]): String = ts.map(num(_)).mkString("[", ",", "]")
+    val qs = results.map { case (k, v) => "\"" + k + "\":" + num(v) }.mkString("{", ",", "}")
     // fixture-construction seconds for the catalog/DSv2 queries whose
     // timed body BUILDS its table before reading it (recorded inside
     // Queries): read-path seconds = queries[k] - fixture_sec[k], so a
@@ -178,15 +184,16 @@ object Bench {
       import scala.jdk.CollectionConverters._
       fsstspark.queries.Queries.fixtureSeconds.asScala.toSeq.sortBy(_._1)
         .filter { case (k, _) => results.contains(k) }
-        .map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
+        .map { case (k, v) => "\"" + k + "\":" + num(v) }.mkString("{", ",", "}")
     }
-    val total = f"${results.values.filter(_ > 0).sum}%.3f"
+    val total = num(results.values.filter(_ > 0).sum)
     println(
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir",""" +
         s""""fixture_sec":$fixtures,""" +
         s""""cpus":$cpus,"pages":$nPages,"pages_bytes_in":$bytesIn,"pages_bytes_out":$bytesOut,""" +
-        f""""pages_ratio":$ratio%.4f,"encode_gbps":$encGbps%.3f,"encode_shuffle_gbps":$encShuffleGbps%.3f,"decode_gbps":$decGbps%.3f,""" +
-        f""""host_kernel_enc_mbps":$hostEncMbps%.1f,"host_kernel_dec_mbps":$hostDecMbps%.1f,""" +
+        s""""pages_ratio":${num(ratio, 4)},"encode_gbps":${num(encGbps)},""" +
+        s""""encode_shuffle_gbps":${num(encShuffleGbps)},"decode_gbps":${num(decGbps)},""" +
+        s""""host_kernel_enc_mbps":${num(hostEncMbps, 1)},"host_kernel_dec_mbps":${num(hostDecMbps, 1)},""" +
         s""""headline_reps":{"local_sec":${repArr(localReps)},"shuffle_sec":${repArr(shuffleReps)},"decode_sec":${repArr(decodeReps)}}}""")
     spark.stop()
   }

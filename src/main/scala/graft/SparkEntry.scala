@@ -45,22 +45,6 @@ object SparkEntry {
     "q_zone_pruning" -> (Queries.qZonePruning _),
     "catalog_time_travel" -> (Queries.catalogTimeTravel _),
     "q_window_runs" -> (Queries.qWindowRuns _),
-    // training-data ops
-    "dedup_exact" -> (Queries.dedupExact _),
-    "dedup_minhash" -> (Queries.dedupMinhash _),
-    "dedup_simhash" -> (Queries.dedupSimhash _),
-    "dedup_minhash_planted" -> (Queries.dedupMinhashPlanted _),
-    "dedup_simhash_planted" -> (Queries.dedupSimhashPlanted _),
-    "dedup_embedding" -> (Queries.dedupEmbedding _),
-    "dedup_dropped_buckets" -> (Queries.dedupDroppedBuckets _),
-    "dedup_ngram" -> (Queries.dedupNgram _),
-    "text_tokens" -> (Queries.textTokens _),
-    "text_quality" -> (Queries.textQuality _),
-    "text_analysis" -> (Queries.textAnalysis _),
-    // similarity search over embeddings
-    "ann_bruteforce" -> (Queries.annBruteforce _),
-    "ann_lsh" -> (Queries.annLsh _),
-    "ann_ivf" -> (Queries.annIvf _),
     // the north-rule pages table end-to-end (shuffle-chunked + zero-shuffle)
     "pages_pipeline" -> (Queries.pagesPipeline _),
     "pages_local_pipeline" -> (Queries.pagesLocalPipeline _),
@@ -84,8 +68,7 @@ object SparkEntry {
     "q_key_range_pushdown" -> (Queries.qKeyRangePushdown _),
     "q_dict_pushdown" -> (Queries.qDictPushdown _),
     "q_fsst_pushdown" -> (Queries.qFsstPushdown _),
-    // multimodal plumbing + streaming ingest front end
-    "multimodal_features" -> (Queries.multimodalFeatures _),
+    // streaming ingest front end
     "streaming_ingest" -> (Queries.streamingIngest _)
   )
 
@@ -372,30 +355,6 @@ object SparkEntry {
                lag(lang) OVER (PARTITION BY doc_id % 32 ORDER BY doc_id) AS prev
                FROM documents)
          GROUP BY chunk_id ORDER BY chunk_id""",
-    "dedup_exact" ->
-      """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-         CAST(count(DISTINCT md5(text)) AS BIGINT) AS n_unique
-         FROM documents GROUP BY lang ORDER BY lang""",
-    "ann_bruteforce" ->
-      """SELECT query_id, id, rank FROM (
-           SELECT q.vec_id AS query_id, c.vec_id AS id,
-                  row_number() OVER (PARTITION BY q.vec_id
-                    ORDER BY list_cosine_similarity(c.embedding, q.embedding) DESC,
-                             c.vec_id) AS rank
-           FROM embeddings c, (SELECT * FROM embeddings WHERE vec_id < 5) q
-           WHERE c.vec_id <> q.vec_id)
-         WHERE rank <= 10 ORDER BY query_id, rank""",
-    "text_tokens" ->
-      """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-         CAST(sum(len(regexp_split_to_array(text, '\s+'))) AS BIGINT) AS n_tokens,
-         CAST(sum(length(text)) AS BIGINT) AS total_chars
-         FROM documents GROUP BY lang ORDER BY lang""",
-    "text_quality" ->
-      """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-         CAST(sum(length(text)) AS BIGINT) AS total_chars,
-         CAST(sum(length(text) - length(regexp_replace(text, '[.!?]', '', 'g'))) AS BIGINT) AS n_sentence_punct,
-         CAST(sum(length(text) - length(regexp_replace(text, '\s', '', 'g'))) AS BIGINT) AS n_whitespace
-         FROM documents GROUP BY lang ORDER BY lang""",
     // Exact byte/row/chunk accounting for the seven-column single-pass
     // encode (codec choices intentionally not pinned here — see the query
     // comment; events_codec_selection carries the golden selection).
@@ -495,40 +454,6 @@ object SparkEntry {
       """SELECT CAST(count(*) AS BIGINT) AS n_rows,
          CAST(count(*) AS BIGINT) AS n_chunk_rows,
          CAST(sum(strlen(text)) AS BIGINT) AS bytes_in,
-         CAST(0 AS BIGINT) AS n_mismatch FROM documents""",
-    "multimodal_features" ->
-      """SELECT 'image' AS media_type, CAST(count(*) AS BIGINT) AS n_items,
-         CAST(sum(strlen('<html><body><h1>https://' || source || '/doc/' || doc_id ||
-           '</h1><p>' || text || '</p></body></html>')) AS BIGINT) AS total_bytes
-         FROM documents""",
-    // recall thresholds asserted in-engine against the (oracled)
-    // brute-force top-10; the oracle pins every query to recall_ok=true.
-    "ann_lsh" ->
-      """SELECT CAST(vec_id AS BIGINT) AS query_id, true AS recall_ok
-         FROM embeddings WHERE vec_id < 5 ORDER BY query_id""",
-    "ann_ivf" ->
-      """SELECT CAST(vec_id AS BIGINT) AS query_id, true AS recall_ok
-         FROM embeddings WHERE vec_id < 5 ORDER BY query_id""",
-    // near-dup RECALL oracle: every planted (doc_id, doc_id+1000000) pair
-    // must be recovered by the LSH pipelines.
-    "dedup_minhash_planted" ->
-      """SELECT CAST(doc_id AS BIGINT) AS id_a, CAST(doc_id + 1000000 AS BIGINT) AS id_b
-         FROM documents WHERE doc_id % 10 = 0 ORDER BY id_a""",
-    "dedup_simhash_planted" ->
-      """SELECT CAST(doc_id AS BIGINT) AS id_a, CAST(doc_id + 2000000 AS BIGINT) AS id_b
-         FROM documents WHERE doc_id % 10 = 0 ORDER BY id_a""",
-    "dedup_embedding" ->
-      """SELECT CAST(vec_id AS BIGINT) AS id_a, CAST(vec_id + 1000000 AS BIGINT) AS id_b
-         FROM embeddings WHERE vec_id % 10 = 0 ORDER BY id_a""",
-    "dedup_ngram" ->
-      """SELECT CAST(doc_id AS BIGINT) AS id_a, CAST(doc_id + 1000000 AS BIGINT) AS id_b
-         FROM documents WHERE doc_id % 10 = 0 ORDER BY id_a""",
-    // recall-loss accounting: one degenerate bucket per minhash band (16),
-    // each holding at least the n/5 boilerplate docs (unrelated collisions
-    // only ever grow a hot bucket; 64-bit band hashes make benign over-cap
-    // buckets impossible without a 50-doc near-identical clique).
-    "dedup_dropped_buckets" ->
-      """SELECT 'minhash' AS method, CAST(16 AS BIGINT) AS n_dropped_buckets,
-         true AS members_floor_ok"""
+         CAST(0 AS BIGINT) AS n_mismatch FROM documents"""
   )
 }

@@ -2,7 +2,6 @@ package fsstspark.streaming
 
 import fsstspark.gen.PagesGen
 import fsstspark.pipeline.{Checkpoint, EncodePipeline, KV}
-import fsstspark.textops.Multimodal
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -98,44 +97,11 @@ class StreamingSpec extends AnyFunSuite {
     val viaConnector = spark.read.format("fsst")
       .option("root", s"$root/catalog").option("table", "pages")
       .option("stringColumns", "text").load()
-      .select(col("key").as("url"), col("text").as("got_text"))
+      .select(col("key").as("url"), col("text"))
     val srcRows = spark.read.parquet(src).select(col("url"), col("text"))
-    assert(viaConnector.count() == srcRows.count() &&
-      viaConnector.join(srcRows, "url")
-        .filter(col("got_text") =!= col("text")).isEmpty,
+    // multiset equality: every source row exactly once, nothing else
+    assert(viaConnector.exceptAll(srcRows).isEmpty && srcRows.exceptAll(viaConnector).isEmpty,
       "connector read of the streaming catalog must match the source")
-  }
-
-  test("multimodal feature extraction is deterministic and batch-shaped") {
-    import spark.implicits._
-    val pages = PagesGen.pages(spark, 100, seed = 4).cache()
-    val f1 = Multimodal.extractFeatures(pages.toDF(), "url", "html", "image")
-      .collect().map(f => f.key -> f).toMap
-    val f2 = Multimodal.extractFeatures(pages.toDF().repartition(7), "url", "html", "image")
-      .collect().map(f => f.key -> f).toMap
-    assert(f1.keySet == f2.keySet && f1.size == 100)
-    f1.foreach { case (k, a) =>
-      val b = f2(k)
-      assert(a.width == b.width && a.mean_intensity == b.mean_intensity &&
-        a.feature.toSeq == b.feature.toSeq)
-    }
-    // features are usable by the ANN operator
-    val feats = Multimodal.extractFeatures(pages.toDF(), "url", "html", "image")
-      .select(xxhash64(col("key")).as("vec_id"), col("feature").as("embedding"))
-    val top = fsstspark.textops.AnnSearch.bruteForceTopK(
-      feats, feats.limit(3), "vec_id", "embedding", 5)
-    assert(top.count() == 15)
-    pages.unpersist()
-  }
-
-  test("frame sampling cuts deterministic windows") {
-    import spark.implicits._
-    val df = Seq(("a", Array.tabulate[Byte](41000)(i => (i % 251).toByte))).toDF("key", "payload")
-    val frames = Multimodal.sampleFrames(df, "key", "payload", frameBytes = 4096, stride = 2)
-    // 41000/4096 = 10 frames, stride 2 → indices 0,2,4,6,8
-    assert(frames.count() == 5)
-    assert(frames.select("frame_idx").as[Int].collect().sorted.toSeq == Seq(0, 2, 4, 6, 8))
-    assert(frames.select(octet_length(col("frame"))).as[Int].collect().forall(_ == 4096))
   }
 
   test("IngestedIdCache reads O(new batches) per call, ids match a cold full load") {
