@@ -1,8 +1,9 @@
 package fsstspark.io
 
 import fsstspark.pipeline.ChunkResult
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.SerializableConfiguration
 
 /** "Iceberg-shaped" chunk-table catalog (SURVEY.md §7.0).
   *
@@ -374,71 +375,64 @@ final class ParquetTableIO(root: String) extends TableIO {
         "left_anti")
     }
 
-  /** Append a batch of chunks. Each batch lands under its own `batch=`
-    * partition directory, so the new manifest rows are derived by scanning
-    * ONLY this batch's files (metadata columns, blobs never read) and
-    * APPENDED — manifest maintenance is O(batch), never O(table). The r2
-    * shape re-scanned the whole data directory per append, which at ~6M
-    * chunks would be a full metadata rescan on every streaming micro-batch.
-    * The batch is invisible until its commit marker lands (see above).
+  /** Append a batch of chunks in ONE Spark job: the tasks that produce
+    * `results` also write them ([[ChunkFileWriter.writeTask]] — one parquet
+    * file per (task, column) under the batch's `batch=`/`column=`
+    * directories) and return their manifest rows. The driver then writes
+    * those rows as the batch's single manifest file and flips the commit
+    * marker ([[commitWrittenBatch]]), so manifest maintenance is O(batch),
+    * never O(table), and no data file is read back. Driver bound: one
+    * manifest row (~150 B) per (chunk, column) is collected — the same
+    * rows the SQL write collects as commit messages. An empty `results`
+    * writes and commits nothing. The batch is invisible until its commit
+    * marker lands (see above); a failed job aborts it.
     */
-  override def writeChunks(results: Dataset[ChunkResult], table: String): Unit = {
-    val spark = results.sparkSession
-    val batch = writeBatch(results, table)
-    commitBatch(spark, table, batch)
-  }
-
-  /** Data + manifest rows for one batch, WITHOUT the commit marker. */
-  private def writeBatch(results: Dataset[ChunkResult], table: String): String = {
-    val spark = results.sparkSession
-    assertNotLegacy(spark, table)
-    // commits/ exists from the FIRST byte of data: a crash during the very
-    // first batch (data written, no marker yet) must read back as an empty
-    // table with an empty commit set — not as a "legacy pre-marker catalog"
-    // (assertNotLegacy's data-without-commits test), which would hard-error
-    // every read and make the torn batch unrecoverable by replay.
-    fs(spark, commitsDir(table)).mkdirs(new org.apache.hadoop.fs.Path(commitsDir(table)))
-    val batch = mintBatchId(spark, table)
-    results.withColumn("batch", lit(batch))
-      .write.partitionBy("batch", "column").mode(SaveMode.Append).parquet(dataDir(table))
-    // manifest rows land under their own batch= partition, so incremental
-    // consumers ([[manifestForBatches]]) prune to NEW batches at directory
-    // level instead of scanning the whole manifest per micro-batch
-    spark.read.parquet(s"${dataDir(table)}/batch=$batch")
-      .select(input_file_name().as("file"), col("column"), col("chunk_id"),
-        col("codec"), col("n_rows"), col("bytes_in"), col("bytes_out"),
-        col("min_key"), col("max_key"), col("value_min"), col("value_max"),
-        lit(batch).as("batch"))
-      .write.partitionBy("batch").mode(SaveMode.Append).parquet(manifestDir(table))
-    batch
-  }
+  override def writeChunks(results: Dataset[ChunkResult], table: String): Unit =
+    writeAndCommit(results.sparkSession, table, results, None)
 
   /** Atomic swap: the new batch's data/manifest land uncommitted, the
     * deletes land GATED on that batch, and the single commit marker flips
     * both into visibility together. Crash before the marker → old chunks
     * visible, new batch + its tombstones inert; crash after → new state.
-    * Never duplicates, never a gap.
+    * Never duplicates, never a gap. With no new chunks it still commits
+    * the deletes.
     */
   override def replaceChunks(spark: SparkSession, table: String,
-      results: Dataset[ChunkResult], removeChunkIds: DataFrame): Unit = {
-    val batch = writeBatch(results, table)
-    removeChunkIds.select(col("chunk_id").cast("long"), col("column").cast("string"),
-        lit(batch).as("gated_by"))
-      .write.mode(SaveMode.Append).parquet(tombDir(table))
-    commitBatch(spark, table, batch)
+      results: Dataset[ChunkResult], removeChunkIds: DataFrame): Unit =
+    writeAndCommit(spark, table, results, Some(removeChunkIds))
+
+  private def writeAndCommit(spark: SparkSession, table: String,
+      results: Dataset[ChunkResult], deletes: Option[DataFrame]): Unit = {
+    val batch = beginBatch(spark, table)
+    val dir = batchDataDir(table, batch)
+    val conf = new SerializableConfiguration(hadoopConf(spark))
+    val write = (chunks: Iterator[ChunkResult]) => ChunkFileWriter.writeTask(dir, conf.value, chunks)
+    val rows =
+      try results.mapPartitions(write)(Encoders.product[ManifestEntry]).collect()
+      catch {
+        case t: Throwable =>
+          abortBatch(spark, table, batch)
+          throw t
+      }
+    commitWrittenBatch(spark, table, batch, rows.toSeq, deletes)
   }
 
-  // ------------------------------------------ external-writer surface
-  // The DSv2 write path ([[fsstspark.sources]]) writes chunk parquet
-  // files from EXECUTOR tasks (parquet-hadoop, not a Spark write job),
-  // then commits through the same marker protocol: beginBatch mints the
-  // id, tasks land files under batchColumnDir, commitExternalBatch
-  // appends the manifest rows and flips the marker. A crash anywhere
-  // before the marker leaves an invisible torn batch, exactly like
-  // writeChunks.
+  private def hadoopConf(spark: SparkSession): org.apache.hadoop.conf.Configuration =
+    spark.sessionState.newHadoopConf()
 
-  /** Mint a batch for an external writer (commits dir exists from the
-    * first byte of data — see [[writeBatch]]).
+  // ------------------------------------------- task-written batches
+  // Every write entry point shares one protocol: beginBatch mints the
+  // id, tasks write through [[ChunkFileWriter]] into batchDataDir and
+  // return manifest rows, commitWrittenBatch publishes them and flips the
+  // marker. A crash anywhere before the marker leaves an invisible torn
+  // batch; abortBatch deletes an uncommitted batch's files.
+
+  /** Mint a batch for task-side writers. commits/ exists from the FIRST
+    * byte of data: a crash during the very first batch (data written, no
+    * marker yet) must read back as an empty table with an empty commit
+    * set — not as a "legacy pre-marker catalog" (assertNotLegacy's
+    * data-without-commits test), which would hard-error every read and
+    * make the torn batch unrecoverable by replay.
     */
   def beginBatch(spark: SparkSession, table: String): String = {
     assertNotLegacy(spark, table)
@@ -446,48 +440,40 @@ final class ParquetTableIO(root: String) extends TableIO {
     mintBatchId(spark, table)
   }
 
-  /** Directory an external writer's task files for (batch, column) go in. */
-  def batchColumnDir(table: String, batch: String, column: String): String =
-    s"${dataDir(table)}/batch=$batch/column=$column"
-
-  /** One batch's data directory (the external writer's commit-time
-    * orphan sweep lists it).
+  /** One batch's data directory: the root a [[ChunkFileWriter]] for the
+    * batch writes under.
     */
   def batchDataDir(table: String, batch: String): String =
     s"${dataDir(table)}/batch=$batch"
 
-  /** Commit an externally-written batch: append its manifest rows (under
-    * the batch's own manifest partition) and flip the commit marker.
-    * `manifest` must carry the manifest schema minus `batch` (file,
-    * column, chunk_id, codec, n_rows, bytes_in, bytes_out, min_key,
-    * max_key, value_min, value_max).
+  private def batchManifestDir(table: String, batch: String): String =
+    s"${manifestDir(table)}/batch=$batch"
+
+  /** Commit a batch whose data files the tasks have written: delete files
+    * under the batch directory that no row names (dead or discarded task
+    * attempts), write `rows` as the batch's one manifest file, tombstone
+    * `deletes` (chunk_id, column) GATED on the batch, and flip the marker —
+    * adds and deletes become visible together. No rows and no deletes is
+    * an empty write: the batch is aborted and nothing commits.
     */
-  def commitExternalBatch(spark: SparkSession, table: String, batch: String,
-      manifest: DataFrame): Unit = {
-    manifest.withColumn("batch", lit(batch))
-      .write.partitionBy("batch").mode(SaveMode.Append).parquet(manifestDir(table))
+  def commitWrittenBatch(spark: SparkSession, table: String, batch: String,
+      rows: Seq[ManifestEntry], deletes: Option[DataFrame]): Unit = {
+    if (rows.isEmpty && deletes.isEmpty) {
+      abortBatch(spark, table, batch)
+      return
+    }
+    val conf = hadoopConf(spark)
+    ChunkFileWriter.sweepOrphans(batchDataDir(table, batch), rows.map(_.file), conf)
+    if (rows.nonEmpty) ChunkFileWriter.writeManifest(batchManifestDir(table, batch), rows, conf)
+    deletes.foreach(writeTombstones(_, table, batch))
     commitBatch(spark, table, batch)
   }
 
-  /** Commit an externally-written batch TOGETHER with chunk deletes, as
-    * ONE snapshot — the external-writer form of [[replaceChunks]] and
-    * the primitive `INSERT OVERWRITE` needs: the new data and manifest
-    * are already on disk (uncommitted), the tombstones land GATED on
-    * this batch, and the single commit marker flips adds and deletes
-    * into visibility together. A crash before the marker leaves the old
-    * state intact (uncommitted data + inert gated tombstones); after,
-    * the new state. `victims` carries (chunk_id, column); `manifest`
-    * may be empty (a pure-overwrite-to-empty still deletes atomically).
-    */
-  def commitExternalBatchWithDeletes(spark: SparkSession, table: String, batch: String,
-      manifest: Option[DataFrame], victims: DataFrame): Unit = {
-    manifest.foreach(_.withColumn("batch", lit(batch))
-      .write.partitionBy("batch").mode(SaveMode.Append).parquet(manifestDir(table)))
-    victims.select(col("chunk_id").cast("long"), col("column").cast("string"),
+  /** Append (chunk_id, column) deletes gated on `batch`'s marker. */
+  private def writeTombstones(chunkIds: DataFrame, table: String, batch: String): Unit =
+    chunkIds.select(col("chunk_id").cast("long"), col("column").cast("string"),
         lit(batch).as("gated_by"))
       .write.mode(SaveMode.Append).parquet(tombDir(table))
-    commitBatch(spark, table, batch)
-  }
 
   /** A fresh id strictly after every id this table has committed —
     * public for non-batch catalog metadata that must order against the
@@ -497,14 +483,15 @@ final class ParquetTableIO(root: String) extends TableIO {
   def newWatermark(spark: SparkSession, table: String): String =
     mintBatchId(spark, table)
 
-  /** Abort an externally-written batch: delete its (uncommitted, hence
-    * invisible) data directory. Idempotent.
+  /** Abort an uncommitted batch: delete its (invisible) data and manifest
+    * directories. Idempotent.
     */
-  def abortBatch(spark: SparkSession, table: String, batch: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"${dataDir(table)}/batch=$batch")
-    val f = fs(spark, dataDir(table))
-    if (f.exists(p)) f.delete(p, true)
-  }
+  def abortBatch(spark: SparkSession, table: String, batch: String): Unit =
+    Seq(batchDataDir(table, batch), batchManifestDir(table, batch)).foreach { d =>
+      val p = new org.apache.hadoop.fs.Path(d)
+      val f = fs(spark, d)
+      if (f.exists(p)) f.delete(p, true)
+    }
 
   /** Full manifest rebuild from the (committed) data files — an explicit
     * repair tool (Iceberg's `repair`/`rewrite_manifests` analogue), NOT
@@ -719,9 +706,7 @@ final class ParquetTableIO(root: String) extends TableIO {
     assertNotLegacy(spark, table)
     fs(spark, commitsDir(table)).mkdirs(new org.apache.hadoop.fs.Path(commitsDir(table)))
     val batch = mintBatchId(spark, table)
-    chunkIds.select(col("chunk_id").cast("long"), col("column").cast("string"),
-        lit(batch).as("gated_by"))
-      .write.mode(SaveMode.Append).parquet(tombDir(table))
+    writeTombstones(chunkIds, table, batch)
     commitBatch(spark, table, batch)
   }
 
@@ -752,7 +737,7 @@ final class ParquetTableIO(root: String) extends TableIO {
     assertManifestNotLegacy(spark, table)
     val f = fs(spark, manifestDir(table))
     batches.iterator.flatMap { b =>
-      val p = new org.apache.hadoop.fs.Path(s"${manifestDir(table)}/batch=$b")
+      val p = new org.apache.hadoop.fs.Path(batchManifestDir(table, b))
       if (!f.exists(p)) Iterator.empty
       else f.listStatus(p).iterator.filter { st =>
         val n = st.getPath.getName

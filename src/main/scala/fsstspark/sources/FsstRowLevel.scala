@@ -31,7 +31,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *    translated), re-encodes them through the shared
   *    [[FsstBatchWrite]] task path, and commits adds + tombstones for
   *    the planned victims under ONE marker
-  *    ([[fsstspark.io.ParquetTableIO.commitExternalBatchWithDeletes]]) —
+  *    ([[fsstspark.io.ParquetTableIO.commitWrittenBatch]]) —
   *    a crash anywhere leaves the pre-operation state, and `VERSION AS
   *    OF` a pre-operation snapshot still reads the old chunks
   *    (batch-scoped tombstones).

@@ -165,9 +165,9 @@ object StreamingEncode {
       .option("checkpointLocation", streamStateDir)
       .foreachBatch { (batch: Dataset[KV], batchId: Long) =>
         val done = cache.doneIds(spark)
-        val enc = EncodePipeline.encodeBytesLocal(batch, column, targetChunkBytes, done).persist()
-        if (enc.count() > 0) io.writeChunks(enc, table)
-        enc.unpersist()
+        // an empty micro-batch (or one whose chunks are all already
+        // ingested) writes and commits nothing
+        io.writeChunks(EncodePipeline.encodeBytesLocal(batch, column, targetChunkBytes, done), table)
         if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
           fsstspark.pipeline.Compaction.compactColumn(
             spark, io, table, column, minBytes, targetChunkBytes)
