@@ -1,7 +1,7 @@
 package fsstspark.io
 
 import fsstspark.pipeline.ChunkResult
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.SerializableConfiguration
 
@@ -408,7 +408,7 @@ final class ParquetTableIO(root: String) extends TableIO {
     val conf = new SerializableConfiguration(hadoopConf(spark))
     val write = (chunks: Iterator[ChunkResult]) => ChunkFileWriter.writeTask(dir, conf.value, chunks)
     val rows =
-      try results.mapPartitions(write)(Encoders.product[ManifestEntry]).collect()
+      try results.rdd.mapPartitions(write).collect()
       catch {
         case t: Throwable =>
           abortBatch(spark, table, batch)
