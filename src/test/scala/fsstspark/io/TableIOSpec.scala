@@ -4,7 +4,7 @@ import fsstspark.pipeline.{ChunkResult, Compaction, EncodePipeline, KV}
 import fsstspark.pipeline.EncodePipeline.ColSpec
 import fsstspark.queries.Queries
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -256,5 +256,32 @@ class TableIOSpec extends AnyFunSuite {
     io.repairManifest(spark, "docs")
     assert(manifestRows(io, "docs") == rows)
     assert(io.readChunks(spark, "docs").count() == n)
+  }
+
+  test("commit sweeps files no manifest row names: lost task attempts and in-progress leftovers") {
+    val root = freshRoot("orphan-sweep")
+    val io = new ParquetTableIO(root)
+    val kv = Queries.docsKV(spark, sf)
+    val chunks = EncodePipeline.encodeBytesLocal(kv, "text", 32L << 10).collect()
+    val batch = io.beginBatch(spark, "docs")
+    val dir = io.batchDataDir("docs", batch)
+    val conf = spark.sparkContext.hadoopConfiguration
+    def attempt(prefix: String): Array[ManifestEntry] = {
+      val w = new ChunkFileWriter(dir, conf, prefix)
+      chunks.foreach(w.write)
+      w.commit()
+    }
+    val rows = attempt("part-0-1")
+    attempt("part-0-2") // a finished attempt whose result the driver never used
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/column=text/.part-0-3-dead.parquet.inprogress"),
+      Array[Byte](1, 2, 3)) // an attempt killed mid-file
+    io.commitWrittenBatch(spark, "docs", batch, rows.toSeq, None)
+    val left = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+    try {
+      assert(left.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .map(_.getFileName.toString).filterNot(_.endsWith(".crc")).toSet ==
+        rows.map(r => new org.apache.hadoop.fs.Path(r.file).getName).toSet)
+    } finally left.close()
+    assert(io.readChunks(spark, "docs").count() == chunks.length)
   }
 }
