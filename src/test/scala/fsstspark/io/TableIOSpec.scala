@@ -128,18 +128,21 @@ class TableIOSpec extends AnyFunSuite {
         s"${(written.keySet -- derived.keySet).take(3)}; only derived ${(derived.keySet -- written.keySet).take(3)}")
   }
 
-  /** Visible (non-hidden) files under `dir`, recursively. */
-  private def visibleFiles(dir: String): Seq[java.nio.file.Path] = {
+  /** Regular files under `dir`, recursively. */
+  private def filesUnder(dir: String): Seq[java.nio.file.Path] = {
     val d = java.nio.file.Paths.get(dir)
     if (!java.nio.file.Files.exists(d)) Nil
     else {
       val s = java.nio.file.Files.walk(d)
-      try s.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
-        .filterNot { p => val n = p.getFileName.toString; n.startsWith(".") || n.startsWith("_") }
-        .toList
+      try s.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_)).toList
       finally s.close()
     }
   }
+
+  /** Visible (non-hidden) files under `dir`, recursively. */
+  private def visibleFiles(dir: String): Seq[java.nio.file.Path] =
+    filesUnder(dir).filterNot { p => val n = p.getFileName.toString; n.startsWith(".") || n.startsWith("_") }
+
   test("written manifest rows equal the rows repairManifest derives: local encode, compaction, SQL INSERT") {
     import spark.implicits._
     val docs = spark.read.parquet(s"$sf/documents.parquet")
@@ -276,12 +279,8 @@ class TableIOSpec extends AnyFunSuite {
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/column=text/.part-0-3-dead.parquet.inprogress"),
       Array[Byte](1, 2, 3)) // an attempt killed mid-file
     io.commitWrittenBatch(spark, "docs", batch, rows.toSeq, None)
-    val left = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-    try {
-      assert(left.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
-        .map(_.getFileName.toString).filterNot(_.endsWith(".crc")).toSet ==
-        rows.map(r => new org.apache.hadoop.fs.Path(r.file).getName).toSet)
-    } finally left.close()
+    assert(filesUnder(dir).map(_.getFileName.toString).filterNot(_.endsWith(".crc")).toSet ==
+      rows.map(r => new org.apache.hadoop.fs.Path(r.file).getName).toSet)
     assert(io.readChunks(spark, "docs").count() == chunks.length)
   }
 }
