@@ -236,23 +236,37 @@ final class ParquetTableIO(root: String) extends TableIO {
       StructField("value_max", LongType), StructField("batch", StringType)))
   }
 
-  private def readManifestRaw(spark: SparkSession, table: String): DataFrame = {
+  private def readManifestRaw(spark: SparkSession, table: String): DataFrame =
+    if (!manifestPresent(spark, table))
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], manifestSchema)
+    else spark.read.schema(manifestSchema).parquet(manifestDir(table))
+
+  /** Whether the manifest directory exists — every manifest read, Spark
+    * or driver-side, asks here first. Only a table with NO DATA may lack
+    * one (DDL sidecar not yet inserted into, or commit markers from
+    * data-less delete batches alone — the tombstone-seeded ledger state);
+    * a table WITH data files but no manifest directory is corruption and
+    * fails loudly rather than silently hiding every chunk (the
+    * assertNotLegacy contract), as does a flat legacy manifest.
+    */
+  private def manifestPresent(spark: SparkSession, table: String): Boolean = {
     assertManifestNotLegacy(spark, table)
-    val p = new org.apache.hadoop.fs.Path(manifestDir(table))
-    if (!fs(spark, manifestDir(table)).exists(p)) {
-      // only a table with NO DATA reads as an empty manifest (DDL sidecar
-      // not yet inserted into, or commit markers from data-less delete
-      // batches alone — the tombstone-seeded ledger state); a table WITH
-      // data files but no manifest directory is corruption and must fail
-      // loudly, not silently hide every chunk (the assertNotLegacy
-      // contract)
+    fs(spark, manifestDir(table)).exists(new org.apache.hadoop.fs.Path(manifestDir(table))) || {
       require(committedBatches(spark, table).isEmpty ||
           !fs(spark, dataDir(table)).exists(new org.apache.hadoop.fs.Path(dataDir(table))),
         s"catalog table '$table' has data but no manifest directory — " +
           "run repairManifest to rebuild it from the data files")
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], manifestSchema)
-    } else spark.read.schema(manifestSchema).parquet(manifestDir(table))
+      false
+    }
   }
+
+  /** The visible (non-hidden, non-sidecar) files directly under `dir`. */
+  private def visibleFiles(f: org.apache.hadoop.fs.FileSystem,
+      dir: org.apache.hadoop.fs.Path): Iterator[org.apache.hadoop.fs.FileStatus] =
+    f.listStatus(dir).iterator.filter { st =>
+      val n = st.getPath.getName
+      st.isFile && !n.startsWith(".") && !n.startsWith("_")
+    }
 
   /** Manifests written before the manifest was batch-partitioned (flat
     * parquet files at the manifest root, `batch` derived from the file
@@ -268,10 +282,7 @@ final class ParquetTableIO(root: String) extends TableIO {
   private def assertManifestNotLegacy(spark: SparkSession, table: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(manifestDir(table))
     val f = fs(spark, manifestDir(table))
-    if (f.exists(p) && f.listStatus(p).exists { st =>
-        val n = st.getPath.getName
-        st.isFile && !n.startsWith(".") && !n.startsWith("_")
-      })
+    if (f.exists(p) && visibleFiles(f, p).hasNext)
       throw new IllegalStateException(
         s"catalog table '$table' has a pre-batch-partitioned (flat) manifest; reading it " +
           "would silently drop its rows — run repairManifest to rebuild it in the " +
@@ -728,41 +739,67 @@ final class ParquetTableIO(root: String) extends TableIO {
     tombstones(spark, table, committedBatches(spark, table)).select("chunk_id", "column")
 
   /** The manifest parquet files of the given batches, one listStatus per
-    * batch directory — the distributed `$chunks` metadata scan plans one
-    * partition per file, so the manifest is READ ON EXECUTORS and the
-    * driver only ever lists file names.
+    * batch directory: the unit both the driver-side manifest read and the
+    * distributed `$chunks` scan (one partition per file) work in.
     */
   def manifestFiles(spark: SparkSession, table: String,
       batches: Seq[String]): Array[(String, String)] = {
-    assertManifestNotLegacy(spark, table)
+    if (!manifestPresent(spark, table)) return Array.empty
     val f = fs(spark, manifestDir(table))
     batches.iterator.flatMap { b =>
       val p = new org.apache.hadoop.fs.Path(batchManifestDir(table, b))
       if (!f.exists(p)) Iterator.empty
-      else f.listStatus(p).iterator.filter { st =>
-        val n = st.getPath.getName
-        st.isFile && !n.startsWith(".") && !n.startsWith("_")
-      }.map(st => (st.getPath.toString, b))
+      else visibleFiles(f, p).map(st => (st.getPath.toString, b))
     }.toArray
   }
 
-  /** The EFFECTIVE tombstones under the current committed snapshot as
-    * plain rows (chunk_id, column, applies_before) — metadata-sized (one
-    * row per delete, far smaller than the manifest), collected so a
-    * distributed metadata reader can apply the batch-scoped filter
-    * per-row without a join.
+  /** The live manifest under the committed snapshot `committed`, read on
+    * the DRIVER with parquet-mr — no Spark job. Same rows as
+    * [[manifestSnapshot]]: every committed batch's manifest file is read,
+    * and a row is dropped iff its batch sorts below the newest effective
+    * tombstone gate for its (chunk_id, column) ([[TombstoneGate]]).
+    * Driver cost: one listStatus per committed batch plus the rows
+    * themselves, streamed — a caller that filters as it iterates holds
+    * only the rows it keeps. Drain the iterator: the file being read
+    * closes when its rows run out.
     */
-  def effectiveTombstones(spark: SparkSession, table: String): Array[(Long, String, String)] =
-    effectiveTombstonesFor(spark, table, committedBatches(spark, table))
+  def liveManifestRows(spark: SparkSession, table: String,
+      committed: Array[String]): Iterator[ManifestEntry] =
+    manifestRows(spark, table, committed.toIndexedSeq,
+      new TombstoneGate(effectiveTombstonesFor(spark, table, committed)))
 
-  /** [[effectiveTombstones]] under a caller-pinned committed snapshot —
-    * for readers that must see ONE consistent view across a separately
-    * planned file list and this tombstone list.
+  /** Every manifest row of `batches`, tombstones NOT applied — the driver
+    * form of [[manifestForBatches]] (the append-log view a stream plans
+    * from).
+    */
+  def batchManifestRows(spark: SparkSession, table: String,
+      batches: Seq[String]): Iterator[ManifestEntry] =
+    manifestRows(spark, table, batches, TombstoneGate.Open)
+
+  private def manifestRows(spark: SparkSession, table: String, batches: Seq[String],
+      gate: TombstoneGate): Iterator[ManifestEntry] = {
+    assertNotLegacy(spark, table)
+    val conf = hadoopConf(spark)
+    manifestFiles(spark, table, batches).iterator.flatMap { case (f, b) =>
+      new ManifestFileReader(f, b, conf, gate)
+    }
+  }
+
+  /** The EFFECTIVE tombstones under a caller-pinned committed snapshot as
+    * plain rows (chunk_id, column, applies_before), read on the driver
+    * with parquet-mr — the rows [[tombstones]] yields, without a Spark
+    * job. Metadata-sized (one row per delete); a [[TombstoneGate]] built
+    * from them applies the batch-scoped filter per row.
     */
   def effectiveTombstonesFor(spark: SparkSession, table: String,
       committed: Array[String]): Array[(Long, String, String)] = {
-    import spark.implicits._
-    tombstones(spark, table, committed).as[(Long, String, String)].collect()
+    val dir = new org.apache.hadoop.fs.Path(tombDir(table))
+    val f = fs(spark, tombDir(table))
+    if (!f.exists(dir)) return Array.empty
+    val conf = hadoopConf(spark)
+    val inScope = committed.toSet
+    visibleFiles(f, dir).flatMap(st =>
+      ManifestFileReader.tombstones(st.getPath.toString, conf, inScope)).toArray
   }
 
   /** Physical reclamation, safe subset: delete data files whose EVERY

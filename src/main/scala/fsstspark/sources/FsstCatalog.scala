@@ -7,7 +7,7 @@ import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import fsstspark.io.ParquetTableIO
+import fsstspark.io.{ManifestFileReader, ParquetTableIO, TombstoneGate}
 
 /** Read-only Spark `TableCatalog` over one chunk-catalog root: registers
   * the encoded tables as first-class SQL names, including SQL TIME
@@ -426,12 +426,12 @@ private[sources] final case class LocalRowsPartition(rows: Seq[Seq[Any]])
     extends org.apache.spark.sql.connector.read.InputPartition
 
 /** `t$chunks` — the live manifest view as a DISTRIBUTED scan: one input
-  * partition per manifest parquet file (driver cost = one file listing),
-  * rows read on executors via parquet-hadoop, tombstone filtering
-  * applied per-row from the broadcast-small effective-tombstone list
-  * (batch-scoped: a row dies iff its batch predates the newest gate for
-  * its (chunk_id, column)). Reads the file's OWN schema — pre-zone-stats
-  * manifest generations simply surface null stats.
+  * partition per manifest parquet file (driver cost = one file listing
+  * per committed batch plus the tombstone read), rows read on executors
+  * by [[fsstspark.io.ManifestFileReader]] — the same per-row reader and
+  * batch-scoped [[fsstspark.io.TombstoneGate]] the connector's
+  * driver-side planning read uses. Each file is read in its OWN schema,
+  * so pre-zone-stats manifest generations surface null stats.
   */
 private[sources] final class FsstChunksTable(root: String, base: String)
     extends Table with org.apache.spark.sql.connector.catalog.SupportsRead {
@@ -469,7 +469,7 @@ private[sources] final class FsstChunksTable(root: String, base: String)
           new FsstChunksReaderFactory(
             new org.apache.spark.util.SerializableConfiguration(
               spark.sessionState.newHadoopConf()),
-            io.effectiveTombstonesFor(spark, base, committed))
+            new TombstoneGate(io.effectiveTombstonesFor(spark, base, committed)))
         }
       }
     }
@@ -479,66 +479,33 @@ private[sources] final case class FsstChunksPartition(file: String, batch: Strin
     extends org.apache.spark.sql.connector.read.InputPartition
 
 private[sources] final class FsstChunksReaderFactory(
-    conf: org.apache.spark.util.SerializableConfiguration,
-    tombs: Array[(Long, String, String)])
+    conf: org.apache.spark.util.SerializableConfiguration, gate: TombstoneGate)
     extends org.apache.spark.sql.connector.read.PartitionReaderFactory {
   override def createReader(p: org.apache.spark.sql.connector.read.InputPartition):
-      org.apache.spark.sql.connector.read.PartitionReader[org.apache.spark.sql.catalyst.InternalRow] =
-    new FsstChunksReader(p.asInstanceOf[FsstChunksPartition], conf.value, tombs)
+      org.apache.spark.sql.connector.read.PartitionReader[org.apache.spark.sql.catalyst.InternalRow] = {
+    val part = p.asInstanceOf[FsstChunksPartition]
+    new FsstChunksReader(new ManifestFileReader(part.file, part.batch, conf.value, gate))
+  }
 }
 
-private[sources] final class FsstChunksReader(part: FsstChunksPartition,
-    conf: org.apache.hadoop.conf.Configuration, tombs: Array[(Long, String, String)])
+/** `$chunks` rows: the manifest view minus file/batch. */
+private[sources] final class FsstChunksReader(rows: ManifestFileReader)
     extends org.apache.spark.sql.connector.read.PartitionReader[org.apache.spark.sql.catalyst.InternalRow] {
   import org.apache.spark.unsafe.types.UTF8String
 
-  // newest gate per (chunk_id, column): a row is dead iff batch < gate
-  private val gate = {
-    val m = new java.util.HashMap[(Long, String), String]()
-    tombs.foreach { t =>
-      val k = (t._1, t._2)
-      val cur = m.get(k)
-      if (cur == null || cur < t._3) m.put(k, t._3)
-    }
-    m
-  }
-  private val reader = org.apache.parquet.hadoop.ParquetReader
-    .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
-      new org.apache.hadoop.fs.Path(part.file))
-    .withConf(new org.apache.hadoop.conf.Configuration(conf))
-    .build()
   private var cur: org.apache.spark.sql.catalyst.InternalRow = _
 
-  override def next(): Boolean = {
-    var g = reader.read()
-    while (g != null) {
-      val cid = g.getLong("chunk_id", 0)
-      val colName = g.getBinary("column", 0).toStringUsingUTF8
-      val gateB = gate.get((cid, colName))
-      if (gateB == null || part.batch >= gateB) {
-        cur = toRow(g, cid, colName)
-        return true
-      }
-      g = reader.read()
-    }
-    false
-  }
-
-  private def toRow(g: org.apache.parquet.example.data.Group, cid: Long,
-      colName: String): org.apache.spark.sql.catalyst.InternalRow = {
-    def has(f: String): Boolean =
-      g.getType.containsField(f) && g.getFieldRepetitionCount(f) > 0
-    def str(f: String): Any =
-      if (has(f)) UTF8String.fromBytes(g.getBinary(f, 0).getBytes) else null
-    def lng(f: String): Any = if (has(f)) java.lang.Long.valueOf(g.getLong(f, 0)) else null
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(Array[Any](
-      UTF8String.fromString(colName), cid, str("codec"),
-      g.getLong("n_rows", 0), g.getLong("bytes_in", 0), g.getLong("bytes_out", 0),
-      str("min_key"), str("max_key"), lng("value_min"), lng("value_max")))
+  override def next(): Boolean = rows.hasNext && {
+    val e = rows.next()
+    cur = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(Array[Any](
+      UTF8String.fromString(e.column), e.chunk_id, UTF8String.fromString(e.codec),
+      e.n_rows, e.bytes_in, e.bytes_out, UTF8String.fromString(e.min_key),
+      UTF8String.fromString(e.max_key), e.value_min.getOrElse(null), e.value_max.getOrElse(null)))
+    true
   }
 
   override def get(): org.apache.spark.sql.catalyst.InternalRow = cur
-  override def close(): Unit = reader.close()
+  override def close(): Unit = rows.close()
 }
 
 object FsstCatalog {

@@ -24,7 +24,7 @@ import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
 import fsstspark.codec.{BytesCodec, LongCodec}
-import fsstspark.io.ParquetTableIO
+import fsstspark.io.{ManifestEntry, ParquetTableIO}
 import fsstspark.pipeline.EncodePipeline
 import fsstspark.util.{Keys, SortableBits}
 
@@ -67,10 +67,11 @@ import fsstspark.util.{Keys, SortableBits}
   *  - An empty projection (`count(*)`) is answered from manifest row
   *    counts without opening any data file.
   *
-  * Planning collects the pruned manifest hit list to the driver — the
-  * same metadata-sized collect as [[ParquetTableIO.chunksForKey]] (one
-  * row per surviving chunk × read column, no blobs). Committed-batch and
-  * tombstone filtering ride on [[ParquetTableIO.manifest]], so a torn or
+  * Schema inference and scan planning read the manifest on the driver
+  * ([[ParquetTableIO.liveManifestRows]]) — no Spark job runs before the
+  * data job — keeping one row per surviving chunk × read column, no
+  * blobs. That read applies the same committed-batch and batch-scoped
+  * tombstone filters as [[ParquetTableIO.manifest]], so a torn or
   * swapped-out batch is invisible here exactly as on the typed read path.
   */
 final class FsstDataSource extends TableProvider with DataSourceRegister {
@@ -82,7 +83,7 @@ final class FsstDataSource extends TableProvider with DataSourceRegister {
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: java.util.Map[String, String]): Table = {
     // Spark hands back inferSchema's result — build the table from it
-    // instead of re-running resolve's manifest jobs (and racing a batch
+    // instead of re-running resolve's manifest read (and racing a batch
     // commit between the two calls into a schema mismatch)
     val opts = new CaseInsensitiveStringMap(properties)
     if (schema != null && schema.nonEmpty) {
@@ -143,13 +144,18 @@ object FsstDataSource {
     // column declared with no watermark ⇒ every pre-ALTER scan fails).
     val declaredSchema = FsstCatalog.readDeclaredSchema(spark, root, table)
     val columnSince = FsstCatalog.readColumnSince(spark, root, table)
+    val committed = io.committedSnapshot(spark, table)
+    // a snapshot pin must NAME a committed batch: the `<= asOf` manifest
+    // filter would otherwise silently resolve a typo to a neighboring
+    // snapshot (or the full table) instead of erroring
+    def requirePinCommitted(): Unit = o.asOf.foreach { b =>
+      require(committed.contains(b),
+        s"fsst table '$table': snapshot '$b' is not a committed batch id " +
+          "(list them via ParquetTableIO.snapshots)")
+    }
     declaredSchema match {
       case Some(declared) =>
-        o.asOf.foreach { b =>
-          require(io.committedBatchIds(spark, table).contains(b),
-            s"fsst table '$table': snapshot '$b' is not a committed batch id " +
-              "(list them via ParquetTableIO.snapshots)")
-        }
+        requirePinCommitted()
         // a snapshot predating an added column's watermark reads it as
         // all-null (the chunks in scope all null-pad) — Iceberg's
         // read-with-current-schema time-travel semantics
@@ -157,40 +163,28 @@ object FsstDataSource {
           columnSince)
       case None =>
     }
-    require(io.tableExists(spark, table),
-      s"fsst table '$table' at '$root' has no committed chunks")
-    // a snapshot pin must NAME a committed batch: the `<= asOf` manifest
-    // filter would otherwise silently resolve a typo to a neighboring
-    // snapshot (or the full table) instead of erroring
-    o.asOf.foreach { b =>
-      require(io.committedBatchIds(spark, table).contains(b),
-        s"fsst table '$table': snapshot '$b' is not a committed batch id " +
-          "(list them via ParquetTableIO.snapshots)")
-    }
     // one codec name per column suffices for typing: value KIND is constant
     // per column (mixed byte/long codecs in one column is table corruption,
-    // which the reader's codec-id validation rejects loudly).
-    // A snapshot pin infers its schema from that snapshot's manifest.
-    def colsOf(df: org.apache.spark.sql.DataFrame) = df
-      .groupBy("column").agg(org.apache.spark.sql.functions.first("codec").as("codec"))
-      .collect()
-      .map(r => (r.getString(0), r.getString(1)))
-      .sortBy(_._1)
-    var cols = colsOf(io.manifestOpt(spark, table, o.asOf))
+    // which the reader's codec-id validation rejects loudly). Read on the
+    // driver (no Spark job); a snapshot pin types from that snapshot's
+    // manifest. The read comes first because it carries the catalog's
+    // loud legacy-layout and missing-manifest checks.
+    def colsOf(rows: Iterator[ManifestEntry]): Array[(String, String)] = {
+      val codecOf = mutable.Map.empty[String, String]
+      rows.foreach(e => if (!codecOf.contains(e.column)) codecOf(e.column) = e.codec)
+      codecOf.toArray.sortBy(_._1)
+    }
+    val inScope = o.asOf.fold(committed)(b => committed.filter(_ <= b))
+    var cols = colsOf(io.liveManifestRows(spark, table, inScope))
+    require(committed.nonEmpty, s"fsst table '$table' at '$root' has no committed chunks")
+    requirePinCommitted()
     // a fully-TRUNCATED table still resolves: deletes don't change column
     // types, so typing falls back to the manifest without tombstone
     // filtering (the ingest-ledger view) — restricted to the snapshot's
     // batches when pinned, or a `VERSION AS OF` an all-deleted snapshot
     // would type itself from columns added AFTER the snapshot
-    if (cols.isEmpty) {
-      val batches = io.committedBatchIds(spark, table)
-      val inScope = o.asOf match {
-        case Some(b) => batches.filter(_ <= b)
-        case None => batches
-      }
-      cols = colsOf(io.manifestForBatches(spark, table, inScope.toIndexedSeq))
-    }
-    // reachable even though tableExists passed: a catalog holding only
+    if (cols.isEmpty) cols = colsOf(io.batchManifestRows(spark, table, inScope.toIndexedSeq))
+    // reachable even with committed batches: a catalog holding only
     // data-less delete batches has commit markers but no manifest rows
     require(cols.nonEmpty, s"fsst table '$table' at '$root' has no readable columns")
     require(!cols.exists(_._1 == "key"), "stored column named 'key' collides with the key field")
@@ -548,10 +542,6 @@ final class FsstScan(root: String, table: String, tableSchema: StructType,
     extends Scan with Batch with SupportsReportStatistics
     with SupportsRuntimeFiltering {
 
-  /** Every manifest read in this scan honors the snapshot pin. */
-  private def manifestDf(spark: SparkSession, io: ParquetTableIO) =
-    io.manifestOpt(spark, table, asOf)
-
   /** Anchor-eligible columns over ONE manifest snapshot. Admission and
     * the read that rides it must see the SAME view: `manifestOpt` pins
     * its committed-batch set at call time, so a per-column compaction
@@ -635,7 +625,7 @@ final class FsstScan(root: String, table: String, tableSchema: StructType,
     // ONE pinned snapshot for BOTH the anchor admission and the fold —
     // a compaction committing between two manifestOpt calls could
     // otherwise invalidate the anchor under the fold silently
-    val mdf = manifestDf(spark, io)
+    val mdf = io.manifestOpt(spark, table, asOf)
     // COUNT/key-bound folds ride a column present in EVERY live chunk
     // instance (aggSpecs refused the pushdown when none existed at
     // probe time; a concurrent rewrite since then surfaces here loudly)
@@ -675,15 +665,24 @@ final class FsstScan(root: String, table: String, tableSchema: StructType,
     * serves it. Cached — `estimateStatistics` and `planInputPartitions`
     * both use it.
     *
-    * SCALE SHAPE: the column projection, key-range predicates, and zone
-    * predicates are applied as CATALYST filters on the manifest
-    * DataFrame BEFORE the collect ([[FsstScan.pruneManifest]]) — the
-    * manifest is parquet, so they prune at row-group level exactly like
-    * [[ParquetTableIO.chunksForKey]], and the driver collects
-    * O(surviving chunks × fetched columns) rows, never
-    * O(chunks × columns). [[FsstScan.planFromManifest]] re-applies the
-    * same predicates driver-side as a residual (idempotent) and keeps
-    * only the grouping role.
+    * SCALE SHAPE: planning runs no Spark job. The driver reads every
+    * committed batch's manifest file with parquet-mr
+    * ([[ParquetTableIO.liveManifestRows]] — one listStatus per batch, the
+    * batch-scoped tombstone gate applied per row) and, as the rows
+    * stream, keeps only those of fetched or filtered columns, of the
+    * runtime chunk ids, and inside the key predicates. So the driver
+    * READS O(chunks × columns) manifest rows but HOLDS only
+    * O(surviving chunks × read columns) of them;
+    * [[FsstScan.planFromManifest]] then applies the zone maps per chunk
+    * instance and groups. Spark jobs over the manifest cost fixed
+    * scheduling overhead on every planning pass, and a query can plan
+    * more than once (every re-plan, e.g. `head()`); on the scan
+    * benchmark they were ~40% of each operation (BASELINE.md,
+    * "connector read path").
+    * Anchor admission, the key-only anchor pick and the row-level
+    * guards are aggregates and stay distributed over
+    * [[ParquetTableIO.manifestSnapshot]], under the same committed
+    * snapshot as the driver read.
     */
   private def plan: (Array[ChunkGroupPartition], Long, Long) = {
     val p = cachedPlan
@@ -692,14 +691,17 @@ final class FsstScan(root: String, table: String, tableSchema: StructType,
   }
 
   private def computePlan(): (Array[ChunkGroupPartition], Long, Long) = {
-    // ONE manifestOpt snapshot spans the whole planning pass — anchor
-    // admission, the plan collect, AND the duplicate-sibling victims
+    // ONE committed snapshot spans the whole planning pass — the driver
+    // manifest read, anchor admission, AND the duplicate-sibling victims
     // guard below (a second snapshot could judge the guard against a
-    // committed set the plan never saw)
+    // committed set the plan never saw). The distributed view is built
+    // only when one of those aggregates actually runs.
     val spark = SparkSession.active
     val io = new ParquetTableIO(root)
-    val mdf = manifestDf(spark, io)
-    val res = computePlanInner(spark, io, mdf)
+    val all = io.committedSnapshot(spark, table)
+    val committed = asOf.fold(all)(b => all.filter(_ <= b))
+    lazy val mdf = io.manifestSnapshot(spark, table, committed)
+    val res = computePlanInner(spark, io, committed, mdf)
     // record the planned victims for the row-level write's commit: every
     // (chunk_id, column) manifest row of every planned instance. Distinct
     // collapses duplicate-id instances across batches — ONE batch-gated
@@ -750,7 +752,8 @@ final class FsstScan(root: String, table: String, tableSchema: StructType,
   }
 
   private def computePlanInner(spark: SparkSession, io: ParquetTableIO,
-      mdf: org.apache.spark.sql.DataFrame): (Array[ChunkGroupPartition], Long, Long) = {
+      committed: Array[String],
+      mdf: => org.apache.spark.sql.DataFrame): (Array[ChunkGroupPartition], Long, Long) = {
     // an EMPTY runtime id set means the probe matched no groups at all —
     // nothing to read, nothing to rewrite
     if (runtimeChunkIds.exists(_.isEmpty)) return (Array.empty, 0L, 0L)
@@ -770,17 +773,15 @@ final class FsstScan(root: String, table: String, tableSchema: StructType,
     val statCols = filters.flatMap(FsstScan.references).filter(c =>
       tableSchema.fields.exists(f => f.name == c &&
         (f.dataType == LongType || f.dataType == DoubleType))).toSet
-    val doubleCols = tableSchema.fields.filter(_.dataType == DoubleType).map(_.name).toSet
-    // the runtime id set is EXACT on chunk_id: push it into the manifest
-    // parquet scan when small (the common selective-DML case); a huge set
-    // (barely-selective probe) stays driver-side — the collected rows are
-    // filtered by set membership below, so victims are exact either way
-    // and a giant In expression never reaches the parquet reader
-    // `mdf` is the plan-wide manifestOpt snapshot (see computePlan):
-    // anchor admission and the plan collect see the same committed set
-    val m = runtimeChunkIds.filter(_.size <= FsstScan.RuntimeIdPushdownLimit)
-      .fold(mdf)(ids =>
-        mdf.filter(org.apache.spark.sql.functions.col("chunk_id").isInCollection(ids)))
+    // the driver manifest read under the plan-wide committed snapshot,
+    // filtered as rows stream: only rows of `columns`, of the runtime ids
+    // (exact on chunk_id, any set size) and inside the key predicates
+    // survive, so the driver holds O(surviving chunks × read columns)
+    // rows, never the whole manifest
+    def liveRows(columns: String => Boolean): Array[ManifestEntry] =
+      io.liveManifestRows(spark, table, committed).filter(e =>
+        columns(e.column) && runtimeChunkIds.forall(_.contains(e.chunk_id)) &&
+          FsstScan.keySurvives(e.min_key, e.max_key, filters)).toArray
     // a counting/anchor column must be live in EVERY live chunk
     // instance — instance-exact, not watermark arithmetic (per-column
     // rewrites break the proxy; see [[FsstScan.everyInstanceCols]]).
@@ -789,21 +790,12 @@ final class FsstScan(root: String, table: String, tableSchema: StructType,
     if (valueFields.isEmpty && statCols.isEmpty && !stored.fieldNames.contains("key") &&
         anchorCols.nonEmpty) {
       // empty projection, no value filters: count rows straight off the
-      // manifest (any single column counts each chunk's rows exactly once);
-      // the key predicate is pushed into the manifest parquet scan, the
-      // driver-side keySurvives is the idempotent residual
-      val anchor = anchorCols.head
-      val rows = m
-        .filter(org.apache.spark.sql.functions.col("column") === anchor)
-        .filter(FsstScan.keyPruneCond(filters))
-        .select("chunk_id", "n_rows", "min_key", "max_key")
-        .collect()
-        .filter(r => FsstScan.keySurvives(r.getString(2), r.getString(3), filters))
-        .filter(r => runtimeChunkIds.forall(_.contains(r.getLong(0))))
+      // manifest (any single column counts each chunk's rows exactly once)
+      val rows = liveRows(_ == anchorCols.head)
       val parts = rows.grouped(chunksPerPartition).map { g =>
-        ChunkGroupPartition(g.map(_.getLong(0)), g.map(_.getLong(1)), Array.empty)
+        ChunkGroupPartition(g.map(_.chunk_id), g.map(_.n_rows), Array.empty)
       }.toArray
-      (parts, rows.map(_.getLong(1)).sum, 0L)
+      (parts, rows.map(_.n_rows).sum, 0L)
     } else {
       // key-only scans anchor on the globally smallest every-batch
       // column (by manifest bytes) — resolved with a distributed
@@ -812,7 +804,7 @@ final class FsstScan(root: String, table: String, tableSchema: StructType,
       // chunks still surface (null-padded).
       val evolved = columnSince.keySet
       lazy val baseAnchor: Option[String] = FsstScan.smallestColumn(
-        m.filter(org.apache.spark.sql.functions.col("column").isin(anchorCols: _*)))
+        mdf.filter(org.apache.spark.sql.functions.col("column").isin(anchorCols: _*)))
       val (fetch, readValues) =
         if (valueFields.nonEmpty)
           (if (valueFields.forall(evolved.contains)) valueFields ++ baseAnchor.toSeq
@@ -827,7 +819,7 @@ final class FsstScan(root: String, table: String, tableSchema: StructType,
       // correct.
       def liveDeclaredRows: Boolean = {
         val declared = tableSchema.fieldNames.drop(1).toSeq
-        declared.nonEmpty && !m.filter(
+        declared.nonEmpty && !mdf.filter(
           org.apache.spark.sql.functions.col("column").isin(declared: _*)).limit(1).isEmpty
       }
       if ((fetch.isEmpty || (valueFields.nonEmpty && valueFields.forall(evolved.contains) &&
@@ -837,13 +829,10 @@ final class FsstScan(root: String, table: String, tableSchema: StructType,
             "instance — cannot anchor a key-only/count scan or null-pad an " +
             "all-evolved projection; rewrite the table onto one schema generation " +
             "(full-table UPDATE or INSERT OVERWRITE)")
-      val needed = (fetch ++ statCols).distinct
-      val mAll = FsstScan.pruneManifest(m, needed, filters, statCols, doubleCols)
-        .select("file", "column", "chunk_id", "n_rows", "bytes_out",
-          "min_key", "max_key", "value_min", "value_max")
-        .collect()
-        .filter(r => runtimeChunkIds.forall(_.contains(r.getLong(2))))
-      FsstScan.planFromManifest(mAll, stored, tableSchema, filters,
+      // planFromManifest applies the zone maps per chunk instance (an
+      // instance failing on ANY fetched or filtered column drops whole)
+      val needed = (fetch ++ statCols).toSet
+      FsstScan.planFromManifest(liveRows(needed), stored, tableSchema, filters,
         chunksPerPartition, table, Some((fetch, readValues)), columnSince)
     }
   }
@@ -895,10 +884,11 @@ final case class FsstOffset(batch: String)
   *
   * The catalog's commit log IS the source-of-truth offset sequence —
   * each micro-batch emits exactly the rows of batches committed in
-  * `(start, end]`, planned from [[fsstspark.io.TableIO.manifestForBatches]]
-  * (directory-pruned to the new batches; the manifest is partitioned by
-  * batch, so per-micro-batch planning cost is O(new batches), never
-  * O(table)). Combined with [[fsstspark.streaming.StreamingEncode.startCatalog]]
+  * `(start, end]`, planned from a driver read of exactly those batches'
+  * manifest files ([[ParquetTableIO.batchManifestRows]]: no Spark job;
+  * the manifest is partitioned by batch, so per-micro-batch planning
+  * reads O(new batches' rows), never O(table), and holds them all —
+  * the micro-batch plan needs every new row). Combined with [[fsstspark.streaming.StreamingEncode.startCatalog]]
   * on the write side this gives an end-to-end streaming pipeline through
   * the encoded catalog.
   *
@@ -956,10 +946,8 @@ final class FsstMicroBatchStream(root: String, table: String, tableSchema: Struc
     val e0 = end.asInstanceOf[FsstOffset].batch
     val batches = io.committedBatchIds(spark, table).filter(b => b > s0 && b <= e0).sorted
     if (batches.isEmpty) return Array.empty
-    val mAll = io.manifestForBatches(spark, table, batches.toIndexedSeq)
-      .select("file", "column", "chunk_id", "n_rows", "bytes_out",
-        "min_key", "max_key", "value_min", "value_max")
-      .collect()
+    // the new batches' manifest files, read on the driver (no Spark job)
+    val mAll = io.batchManifestRows(spark, table, batches.toIndexedSeq).toArray
     FsstScan.planFromManifest(mAll, required, tableSchema, filters, chunksPerPartition, table,
       None, columnSince)
       ._1.asInstanceOf[Array[InputPartition]]
@@ -976,10 +964,10 @@ private[sources] object FsstScan {
   /** Name of the `_chunk_id` metadata column ([[FsstTable.metadataColumns]]). */
   val ChunkIdCol = "_chunk_id"
 
-  /** Largest runtime chunk-id set pushed into the manifest parquet scan
-    * as an In predicate; bigger sets (a barely-selective probe) filter
-    * driver-side on the statically-pruned collect instead — same exact
-    * result, no giant expression in the parquet reader.
+  /** Largest chunk-id set [[liveInstanceCounts]] pushes into the
+    * manifest parquet scan as an In predicate; bigger sets join against
+    * an id frame instead — same exact result, no giant expression in the
+    * parquet reader.
     */
   val RuntimeIdPushdownLimit = 10000
 
@@ -1094,9 +1082,9 @@ private[sources] object FsstScan {
       org.apache.spark.sql.functions.col("file"), "batch=([^/]*)", 1)
 
   /** Shared planning tail of the batch scan and the micro-batch stream:
-    * prune + group manifest rows (positional schema `file, column,
-    * chunk_id, n_rows, bytes_out, min_key, max_key, value_min,
-    * value_max`) into chunk-group partitions. Key-only scans anchor on
+    * prune + group driver-read manifest rows into chunk-group partitions.
+    * Zone maps prune here, per chunk instance: an instance whose ANY
+    * fetched or filtered column fails its zone test drops whole. Key-only scans anchor on
     * ONE stored column for key blobs + row counts — chosen as the
     * SMALLEST column by manifest bytes, so e.g. a key scan of the pages
     * table rides the lang column, not html — and skip value bytes
@@ -1114,7 +1102,7 @@ private[sources] object FsstScan {
     * repeated single-column `encodeBytesLocal` + `writeChunks`) are
     * served by the typed per-column read path, not the connector.
     */
-  def planFromManifest(mAll: Array[org.apache.spark.sql.Row], required: StructType,
+  def planFromManifest(mAll: Array[ManifestEntry], required: StructType,
       tableSchema: StructType, filters: Array[Filter], chunksPerPartition: Int,
       table: String, fetchOverride: Option[(Seq[String], Boolean)] = None,
       columnSince: Map[String, String] = Map.empty): (Array[ChunkGroupPartition], Long, Long) = {
@@ -1136,16 +1124,16 @@ private[sources] object FsstScan {
         // undeclared dropped columns neither anchor nor veto, and a
         // column physically absent from a per-column-rewrite batch is
         // never admitted by watermark arithmetic
-        val byInst = mAll.filter(r => declaredSet.contains(r.getString(1)))
-          .groupBy(r => (r.getLong(2), batchFromPath(r.getString(0))))
+        val byInst = mAll.filter(r => declaredSet.contains(r.column))
+          .groupBy(r => (r.chunk_id, batchFromPath(r.file)))
         val ok =
           if (byInst.isEmpty) Set.empty[String]
           else byInst.valuesIterator
-            .map(_.iterator.map(_.getString(1)).toSet).reduce(_ intersect _)
-        val rows = mAll.filter(r => ok.contains(r.getString(1)))
+            .map(_.iterator.map(_.column).toSet).reduce(_ intersect _)
+        val rows = mAll.filter(r => ok.contains(r.column))
         if (rows.isEmpty) None
-        else Some(rows.groupBy(_.getString(1)).view
-          .mapValues(_.map(_.getLong(4)).sum).minBy(t => (t._2, t._1))._1)
+        else Some(rows.groupBy(_.column).view
+          .mapValues(_.map(_.bytes_out).sum).minBy(t => (t._2, t._1))._1)
       }
       if (valueFields.nonEmpty)
         (if (valueFields.forall(evolved.contains)) valueFields ++ anchor.toSeq
@@ -1161,10 +1149,10 @@ private[sources] object FsstScan {
     // instances of undeclared columns are legitimately invisible.
     val fetchSet = fetch.toSet
     def lostInstance: Boolean = fetchOverride.isEmpty &&
-      mAll.filter(r => declaredSet.contains(r.getString(1)))
-        .groupBy(r => (r.getLong(2), batchFromPath(r.getString(0))))
-        .exists { case (_, rows) => !rows.exists(r => fetchSet.contains(r.getString(1))) }
-    if ((fetch.isEmpty && mAll.exists(r => declaredSet.contains(r.getString(1)))) ||
+      mAll.filter(r => declaredSet.contains(r.column))
+        .groupBy(r => (r.chunk_id, batchFromPath(r.file)))
+        .exists { case (_, rows) => !rows.exists(r => fetchSet.contains(r.column)) }
+    if ((fetch.isEmpty && mAll.exists(r => declaredSet.contains(r.column))) ||
         lostInstance)
       throw new IllegalStateException(
         s"table '$table': no fetchable column is live in every chunk instance " +
@@ -1172,27 +1160,22 @@ private[sources] object FsstScan {
           "generation (full-table UPDATE or INSERT OVERWRITE)")
     if (fetch.isEmpty) return (Array.empty, 0L, 0L)
     val needed = (fetch ++ statCols).distinct.toSet
-    val m = mAll.filter(r => needed.contains(r.getString(1)))
+    val m = mAll.filter(r => needed.contains(r.column))
     // (chunk_id, batch) -> per-column manifest rows: one PHYSICAL chunk.
     // Grouping by id alone would merge chunks whose id repeats across
     // append batches (hash-mode ids are bucket indexes in every batch)
     // and silently drop all but one file's rows.
-    val byInstance = m.groupBy(r => (r.getLong(2), batchFromPath(r.getString(0))))
+    val byInstance = m.groupBy(r => (r.chunk_id, batchFromPath(r.file)))
     val survivors = byInstance.filter { case (_, rows) =>
-      val r0 = rows(0)
-      keySurvives(r0.getString(5), r0.getString(6), filters) &&
-        rows.forall { r =>
-          val colName = r.getString(1)
-          val lo = if (r.isNullAt(7)) None else Some(r.getLong(7))
-          val hi = if (r.isNullAt(8)) None else Some(r.getLong(8))
-          valueSurvives(colName, lo, hi, doubleCols.contains(colName), filters)
-        }
+      keySurvives(rows(0).min_key, rows(0).max_key, filters) &&
+        rows.forall(r => valueSurvives(r.column, r.value_min, r.value_max,
+          doubleCols.contains(r.column), filters))
     }
     val groups = mutable.LinkedHashMap.empty[Seq[String], mutable.ArrayBuffer[(Long, Long)]]
     var totalRows = 0L
     var totalBytes = 0L
     survivors.toArray.sortBy(_._1).foreach { case ((cid, batch), rows) =>
-      val perCol = rows.groupBy(_.getString(1))
+      val perCol = rows.groupBy(_.column)
       fetch.foreach { c =>
         val n = perCol.get(c).map(_.length).getOrElse(0)
         // a column added by schema evolution is legitimately absent from
@@ -1206,11 +1189,11 @@ private[sources] object FsstScan {
           "columns via the typed API, or rewrite the table onto one schema " +
           "generation (full-table UPDATE or INSERT OVERWRITE)")
       }
-      val fileOf = perCol.view.mapValues(_.head.getString(0)).toMap
+      val fileOf = perCol.view.mapValues(_.head.file).toMap
       val tuple = fetch.map(c => fileOf.getOrElse(c, ""))
-      groups.getOrElseUpdate(tuple, mutable.ArrayBuffer.empty) += ((cid, rows(0).getLong(3)))
-      totalRows += rows(0).getLong(3)
-      totalBytes += rows.filter(r => fetch.contains(r.getString(1))).map(_.getLong(4)).sum
+      groups.getOrElseUpdate(tuple, mutable.ArrayBuffer.empty) += ((cid, rows(0).n_rows))
+      totalRows += rows(0).n_rows
+      totalBytes += rows.filter(r => fetch.contains(r.column)).map(_.bytes_out).sum
     }
     val parts = groups.iterator.flatMap { case (files, chunks) =>
       chunks.grouped(chunksPerPartition).map { g =>
@@ -1223,10 +1206,11 @@ private[sources] object FsstScan {
 
   // ------------------------------------------------- Catalyst pruning
   // The same key-range / zone-map tests keySurvives/valueSurvives apply
-  // driver-side, re-expressed as Catalyst Columns over the manifest
-  // DataFrame, so the pruning runs INSIDE the manifest parquet scan
-  // (row-group stats on min_key/max_key/value_min/value_max) and the
-  // driver only ever collects surviving rows. Exactness transfer: Spark
+  // on the driver, re-expressed as Catalyst Columns over the manifest
+  // DataFrame for the DISTRIBUTED manifest consumers (FsstRowDelete's
+  // victim pruning, the chunk-aligned DELETE probe), so their pruning
+  // runs INSIDE the manifest parquet scan (row-group stats on
+  // min_key/max_key/value_min/value_max). Exactness transfer: Spark
   // compares StringType in UTF8String binary order, which IS the UTF-8
   // code-point order of [[Keys.compareUtf8]] (property-tested in
   // KeysSpec), and zone bounds compare as the same signed longs.

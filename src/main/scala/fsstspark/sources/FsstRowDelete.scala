@@ -22,8 +22,8 @@ import fsstspark.pipeline.{ChunkResult, EncodePipeline}
   * anywhere leaves either the old or the new state (one commit marker
   * flips the rewritten chunks and the tombstones together).
   *
-  * Scale shape: the victim set is pruned with the SAME filter-pushed
-  * manifest predicates as the connector scan ([[FsstScan.pruneManifest]] —
+  * Scale shape: the victim set is pruned with the Catalyst form of the
+  * connector scan's key and zone tests ([[FsstScan.pruneManifest]] —
   * key ranges + zone maps prune at parquet row-group level), so the
   * rewrite cost is O(chunks that may contain a match), never O(table).
   * The driver holds the victim id list (ids only — metadata-sized

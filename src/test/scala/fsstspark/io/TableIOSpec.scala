@@ -112,8 +112,8 @@ class TableIOSpec extends AnyFunSuite {
     * over all eleven fields.
     */
   private def manifestRows(io: ParquetTableIO, table: String): Map[Seq[Any], Int] =
-    io.manifestForBatches(spark, table, io.committedBatchIds(spark, table).toSeq)
-      .collect().map(_.toSeq).groupBy(identity).map { case (k, v) => k -> v.length }
+    multiset(io.manifestForBatches(spark, table, io.committedBatchIds(spark, table).toSeq)
+      .collect().iterator.map(_.toSeq))
 
   /** The rows the writer committed must be exactly what `repairManifest`
     * derives from the data files with `input_file_name()`.
@@ -126,6 +126,30 @@ class TableIOSpec extends AnyFunSuite {
     assert(written == derived,
       s"committed manifest differs from the data files: only written " +
         s"${(written.keySet -- derived.keySet).take(3)}; only derived ${(derived.keySet -- written.keySet).take(3)}")
+  }
+
+  private val ManifestFields = Seq("file", "column", "chunk_id", "codec", "n_rows", "bytes_in",
+    "bytes_out", "min_key", "max_key", "value_min", "value_max")
+
+  private def multiset(rows: Iterator[Seq[Any]]): Map[Seq[Any], Int] =
+    rows.toSeq.groupBy(identity).map { case (k, v) => k -> v.length }
+
+  /** The driver-side live manifest read must return exactly the rows of
+    * the Spark view `manifestSnapshot`, as multisets over all eleven
+    * fields, under the same committed snapshot.
+    */
+  private def assertDriverReadMatches(io: ParquetTableIO, table: String,
+      committed: Array[String], state: String): Map[Seq[Any], Int] = {
+    val driver = multiset(io.liveManifestRows(spark, table, committed).map(e =>
+      Seq[Any](e.file, e.column, e.chunk_id, e.codec, e.n_rows, e.bytes_in, e.bytes_out,
+        e.min_key, e.max_key, e.value_min.getOrElse(null), e.value_max.getOrElse(null))))
+    val viaSpark = multiset(io.manifestSnapshot(spark, table, committed)
+      .select(ManifestFields.map(col): _*).collect().iterator.map(_.toSeq))
+    val same = driver == viaSpark
+    assert(same,
+      s"$state: only in the driver read ${(driver.keySet -- viaSpark.keySet).take(3)}; " +
+        s"only in manifestSnapshot ${(viaSpark.keySet -- driver.keySet).take(3)}")
+    driver
   }
 
   /** Regular files under `dir`, recursively. */
@@ -282,5 +306,75 @@ class TableIOSpec extends AnyFunSuite {
     assert(filesUnder(dir).map(_.getFileName.toString).filterNot(_.endsWith(".crc")).toSet ==
       rows.map(r => new org.apache.hadoop.fs.Path(r.file).getName).toSet)
     assert(io.readChunks(spark, "docs").count() == chunks.length)
+  }
+
+  test("the driver manifest read equals manifestSnapshot across tombstone, swap, pin and schema states") {
+    import spark.implicits._
+    val root = freshRoot("driver-manifest")
+    val io = new ParquetTableIO(root)
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    val kv = docs.select(lpad(col("doc_id").cast("string"), 8, "0").as("key"),
+      encode(col("text"), "UTF-8").as("value")).as[KV]
+    io.writeChunks(EncodePipeline.encodeBytesLocal(kv.filter(col("key") < "00000250"), "text", 4L << 10), "docs")
+    io.writeChunks(EncodePipeline.encodeBytesLocal(kv.filter(col("key") >= "00000250"), "text", 4L << 10), "docs")
+    def committed = io.committedBatchIds(spark, "docs")
+    def check(state: String): Set[Long] =
+      assertDriverReadMatches(io, "docs", committed, state).keySet.map(_(2).asInstanceOf[Long])
+    val ids = check("two appends").toSeq.sorted
+    assert(ids.length >= 6, "fixture should cut several chunks")
+    val tombDir = s"$root/docs/tombstones"
+
+    // a legacy tombstone file, written before deletes carried a gate: an
+    // immediate delete of every instance
+    Seq((ids(0), "text")).toDF("chunk_id", "column").write.mode("append").parquet(tombDir)
+    assert(!check("legacy null-gated tombstone").contains(ids(0)))
+
+    // deletes gated on a batch that never commits stay inert
+    val torn = io.beginBatch(spark, "docs")
+    Seq((ids(1), "text", torn)).toDF("chunk_id", "column", "gated_by")
+      .write.mode("append").parquet(tombDir)
+    assert(check("gated tombstone of an uncommitted batch").contains(ids(1)))
+
+    // a snapshot pinned before a DELETE still sees the deleted chunk
+    val pin = committed.max
+    io.removeChunks(spark, "docs", Seq((ids(2), "text")).toDF("chunk_id", "column"))
+    assert(!check("after DELETE").contains(ids(2)))
+    assert(assertDriverReadMatches(io, "docs", committed.filter(_ <= pin), "asOf before DELETE")
+      .keySet.exists(_(2) == ids(2)))
+
+    // a replaceChunks swap whose new chunks repeat the ids it deletes:
+    // the gate kills the old instances and keeps the new ones
+    val fresh = EncodePipeline.encodeBytesLocal(kv.filter(col("key") >= "00000250"), "text", 4L << 10)
+    val freshIds = fresh.select("chunk_id").as[Long].collect().toSeq
+    io.replaceChunks(spark, "docs", fresh, freshIds.map((_, "text")).toDF("chunk_id", "column"))
+    assert(check("replaceChunks swap").intersect(freshIds.toSet) == freshIds.toSet)
+
+    // per-column compaction: another swap, many victims, fresh ids
+    assert(Compaction.compactColumn(spark, io, "docs", "text",
+      minChunkBytes = 1L << 20, targetChunkBytes = 64L << 10).chunksWritten > 0)
+    check("Compaction.compactColumn")
+
+    // ALTER TABLE ADD COLUMN through the SQL catalog, and a manifest
+    // generation written before zone-map stats existed
+    val cat = s"fsst_drv_${math.abs(root.hashCode)}"
+    spark.conf.set(s"spark.sql.catalog.$cat", "fsstspark.sources.FsstCatalog")
+    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+    spark.sql(s"CREATE TABLE $cat.sqlt (key STRING, text STRING, n BIGINT) USING fsst")
+    docs.select(lpad(col("doc_id").cast("string"), 8, "0").as("key"), col("text"),
+      col("n_chars").as("n")).createOrReplaceTempView("drv_src")
+    spark.sql(s"INSERT INTO $cat.sqlt SELECT * FROM drv_src WHERE key < '00000300'")
+    val first = io.committedBatchIds(spark, "sqlt").max
+    spark.sql(s"ALTER TABLE $cat.sqlt ADD COLUMNS (m BIGINT)")
+    spark.sql(s"INSERT INTO $cat.sqlt SELECT key, text, n, n * 2 FROM drv_src WHERE key >= '00000300'")
+    val sqlRows = assertDriverReadMatches(io, "sqlt", io.committedBatchIds(spark, "sqlt"), "ADD COLUMN")
+    assert(sqlRows.keySet.exists(_(1) == "m") && sqlRows.keySet.exists(r => r(1) == "n" && r(9) != null))
+    val firstDir = s"$root/sqlt/manifest/batch=$first"
+    val preStats = spark.read.parquet(firstDir).drop("value_min", "value_max").collect()
+    val preSchema = spark.read.parquet(firstDir).drop("value_min", "value_max").schema
+    spark.createDataFrame(java.util.Arrays.asList(preStats: _*), preSchema)
+      .coalesce(1).write.mode("overwrite").parquet(firstDir)
+    val mixed = assertDriverReadMatches(io, "sqlt", io.committedBatchIds(spark, "sqlt"),
+      "pre-zone-stats manifest generation")
+    assert(mixed.keySet.exists(r => r(1) == "n" && r(9) == null))
   }
 }

@@ -49,6 +49,39 @@ class DataSourceSpec extends AnyFunSuite {
   private def freshRoot(): String =
     java.nio.file.Files.createTempDirectory("dsv2-spec").toString
 
+  /** Spark jobs started while `body` runs. Listener delivery is
+    * asynchronous, so a fence job is run before and after `body`: once
+    * the listener has seen a fence start, every earlier job start has
+    * been delivered.
+    */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val starts = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        starts.put(Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    def fence(tag: String): Int = {
+      sc.setJobDescription(tag)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      var before = 0
+      var seen = starts.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      while (seen != null && seen != tag) {
+        before += 1
+        seen = starts.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      }
+      assert(seen == tag, s"fence job '$tag' never reached the listener")
+      before
+    }
+    sc.addSparkListener(listener)
+    try {
+      fence("fence-before")
+      body
+      fence("fence-after")
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("format(fsst) round-trips all column types through plain spark.read") {
     val root = freshRoot()
     val df = pagesDf
@@ -1265,5 +1298,62 @@ class DataSourceSpec extends AnyFunSuite {
     Files.write(tmp, "c1".getBytes("UTF-8")) // no tab separator
     assert(FsstCatalog.readColumnSince(spark, root, "t").isEmpty)
     assert(!Files.exists(since))
+  }
+
+  test("connector planning runs no Spark job: resolve and plan read the manifest on the driver") {
+    val root = freshRoot()
+    val df = pagesDf.orderBy("url").coalesce(1)
+    val io = writeTable(df, root, "pages", chunkBytes = 8L << 10)
+    val pin = io.committedBatchIds(spark, "pages").max
+    writeTable(df.filter(col("ts") % 2000L === 0L), root, "pages", chunkBytes = 8L << 10)
+    val cat = s"fsst_jobs_${math.abs(root.hashCode)}"
+    spark.conf.set(s"spark.sql.catalog.$cat", "fsstspark.sources.FsstCatalog")
+    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+    spark.conf.set(s"spark.sql.catalog.$cat.stringColumns.pages", "text")
+    val urls = df.select("url").collect().map(_.getString(0))
+    val texts = df.select("text").limit(3).collect().map(_.getString(0))
+    val tsMid = df.select(max("ts")).collect()(0).getLong(0) / 2
+    def load(): DataFrame = spark.read.format("fsst").option("root", root)
+      .option("table", "pages").option("stringColumns", "text").load()
+    val scans: Seq[(String, () => DataFrame)] = Seq(
+      "full scan" -> (() => load()),
+      "key-range scan" -> (() => load().filter(col("key") >= urls(20) && col("key") < urls(60))),
+      "zone-pruned scan" -> (() => load().filter(col("ts") > tsMid)),
+      "eq/IN-pushdown scan" -> (() => load().filter(col("text").isin(texts: _*))),
+      "VERSION AS OF" -> (() => spark.sql(s"SELECT * FROM $cat.pages VERSION AS OF '$pin'")))
+    scans.foreach { case (what, q) =>
+      var d: DataFrame = null
+      val planning = jobsDuring { d = q(); d.queryExecution.executedPlan }
+      assert(planning == 0, s"$what: load + planning ran $planning Spark jobs")
+      var rows = 0
+      val exec = jobsDuring { rows = d.collect().length }
+      assert(exec == 1, s"$what: collect ran $exec jobs, expected only the data job")
+      assert(rows > 0, s"$what: fixture should return rows")
+    }
+  }
+
+  test("corrupt catalog layouts fail loudly through the connector, never read as empty") {
+    def read(root: String): Unit =
+      spark.read.format("fsst").option("root", root).option("table", "t").load().collect()
+    def failure(root: String): String =
+      intercept[Exception](read(root)).getMessage
+    // a flat manifest from before the manifest was batch-partitioned
+    val flat = freshRoot()
+    writeTable(pagesDf, flat, "t")
+    val mRoot = new java.io.File(s"$flat/t/manifest")
+    val part = mRoot.listFiles().filter(_.isDirectory).flatMap(_.listFiles())
+      .find(_.getName.endsWith(".parquet")).get
+    java.nio.file.Files.copy(part.toPath, new java.io.File(mRoot, "part-legacy.parquet").toPath)
+    assert(failure(flat).contains("pre-batch-partitioned (flat) manifest"))
+    // data files with no manifest directory
+    val noManifest = freshRoot()
+    writeTable(pagesDf, noManifest, "t")
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$noManifest/t/manifest"))
+    assert(failure(noManifest).contains("has data but no manifest directory"))
+    // a catalog written before batch-commit markers
+    val preMarker = freshRoot()
+    writeTable(pagesDf, preMarker, "t")
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$preMarker/t/commits"))
+    assert(failure(preMarker).contains("predates batch-commit markers"))
   }
 }
